@@ -29,6 +29,10 @@ from simple_anonymizer_spark.operators import components
 
 def main() -> None:
     diameters = [int(a) for a in sys.argv[1:]] or [8, 16, 32]
+    # Node ids are chain * 10000 + position: a longer chain would run
+    # into the next chain's id range.
+    if not all(0 < d < 10000 for d in diameters):
+        raise SystemExit(f"diameters must be in 1..9999, got {diameters}")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.appName("components-chain-bench")

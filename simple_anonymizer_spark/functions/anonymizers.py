@@ -214,17 +214,6 @@ def register_all(spark: SparkSession, prefix: str = "anon_") -> None:
     sparksql.register_all(spark, prefix)
 
 
-def register_python_udfs(spark: SparkSession, prefix: str = "pyanon_") -> None:
-    """Row-at-a-time Python UDF registration of the ``pyimpl`` mirrors —
-    ONLY for debugging the pure-Python reference implementation from SQL.
-    ~100x slower than the native path; never use in pipelines (the distinct
-    ``pyanon_`` prefix keeps the slow path impossible to adopt silently)."""
-    from . import pyimpl
-
-    for name, fn in pyimpl.PY_ANONYMIZERS.items():
-        spark.udf.register(f"{prefix}{name}", fn, "string")
-
-
 def shift_timestamp(
     ts: Column | str, entity: Column | str, max_days: int = 180
 ) -> Column:

@@ -64,12 +64,6 @@ def adjacent_pairs(arr: Column, pair_fn, empty_type: str) -> Column:
     )[0]
 
 
-def _salted_hasher(salt: str):
-    # NB: higher-order functions inspect lambda arity (defaults included),
-    # so loop captures must use closure factories, not default args.
-    return lambda s: salted_hash(s, salt)
-
-
 MERSENNE_31 = 2147483647
 
 

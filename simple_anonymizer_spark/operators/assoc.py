@@ -78,7 +78,8 @@ def association_rules(
         .localCheckpoint(eager=True)
     )
     # Single-row basket total: broadcast into every output row instead of
-    # collecting to the driver — keeps the operator fully lazy/composable.
+    # collecting it to the driver: the items/supp checkpoints are the
+    # operator's only eager jobs.
     n_b = items.agg(F.count(F.lit(1)).cast("long").alias("n_baskets"))
     supp = (
         items.select(F.explode("__items").alias("item"))

@@ -166,8 +166,9 @@ def hyperplane_bucket(
         out = out + b
     # Fail-loudly guard: one size check per row, added as an integer 0
     # term so the bucket value (and its type) is bit-identical for every
-    # legal vector. size(NULL) is -1, so NULL vectors pass through with
-    # their pre-existing bucket-0 behavior.
+    # legal vector. size(NULL) is -1 (legacy) or NULL (ANSI); both fail
+    # the > max_dim test, so NULL vectors keep their pre-existing bucket-0
+    # behavior.
     guard = F.when(
         F.size(vec) > max_dim,
         F.raise_error(

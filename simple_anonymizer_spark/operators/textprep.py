@@ -542,26 +542,14 @@ def _adjacent_pairs(sym: Column) -> Column:
     """Adjacent symbol pairs (``"l r"`` strings) of a symbol array —
     the pair-count kernel both merge trainers share.
 
-    ``sym`` is bound ONCE as a lambda leaf via the one-element-array
-    transform (the quantize_int8 pattern): the naive
-    ``zip_with(slice(sym,1,n-1), slice(sym,2,n-1), ...)`` form
-    references ``sym`` FIVE times, and when ``sym`` carries the
-    accumulated merge fold each reference re-evaluates the whole
-    fold per row (r13: measured ~5x the fold work per pair-count
-    job at checkpoint-interval depth; Catalyst neither hoists nor
-    CSEs the duplicated subtree). Output rows are byte-identical —
-    the pair construction itself is unchanged."""
-    return F.transform(
-        F.array(sym),
-        lambda s: F.when(
-            F.size(s) >= 2,
-            F.zip_with(
-                F.slice(s, 1, F.size(s) - 1),
-                F.slice(s, 2, F.size(s) - 1),
-                lambda x, y: F.concat_ws(" ", x, y),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )[0]
+    ``textops.adjacent_pairs`` binds ``sym`` once: it carries the
+    accumulated merge fold, which must not be evaluated once per
+    reference."""
+    from ..functions import textops as T
+
+    return T.adjacent_pairs(
+        sym, lambda x, y: F.concat_ws(" ", x, y), "array<string>"
+    )
 
 
 def _bpe_merge_loop(vocab: DataFrame, n_merges: int) -> list[tuple]:

@@ -4,12 +4,18 @@ Plan → enrich → validate → execute, all driver-side; execution submits one
 Spark write job per table, levels sequential and tables within a level in
 parallel (``src/DbCopier.scala:57-83`` — there it's eager Futures, here a
 thread pool submitting Spark actions; Spark's scheduler interleaves jobs).
+The same pool resolves the ``read_table`` calls up front, so per-table
+source schema lookups (a round trip each on a JDBC/pgwire source) overlap.
 
 Spec enrichment (``src/DbCopier.scala:85-99``): PK and FK columns are
 auto-appended as passthrough ``SourceColumn``s, deduplicated by name with
 the user's spec winning; propagated subset filters are applied via
-``plans.propagation.apply_subsetting`` (semi-joins + fixpoint closures)
-rather than re-rendered SQL.
+``plans.propagation.apply_subsetting`` rather than re-rendered SQL. It
+pins each filtered parent's FK key set once (level by level, tables of a
+level in parallel) and each write semi-joins those key sets, so a copy
+scans every source table at most twice — once for its key set, if other
+tables depend on it, and once for its write — instead of re-reading the
+whole ancestor chain for every descendant.
 """
 
 from __future__ import annotations
@@ -86,31 +92,30 @@ class DbCopier:
         ]
         levels = sort_tables(in_scope, fks)
 
-        # Read + subset (explicit filters AND propagated semi-joins).
-        dfs = {t: self.read_table(t) for t in in_scope}
-        explicit = {
-            t: spec.where_clause.render()
-            for t, spec in enriched.items()
-            if spec.where_clause is not None and t in dfs
-        }
-        subsetted = apply_subsetting(dfs, catalog, explicit)
-
         logger.info("Copying %d tables in %d levels...",
                     sum(map(len, levels)), len(levels))
         results: dict[str, int] = {t: 0 for t in self.skipped_tables if t in catalog.tables}
 
-        def copy_one(table: str) -> tuple[str, int]:
-            spec = enriched[table]
-            # WHERE already applied during subsetting — compile columns/limit only.
-            df = apply_spec(subsetted[table], replace(spec, where_clause=None))
-            return table, self.write_table(table, df)
+        with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as pool:
+            # Read + subset (explicit filters AND propagated semi-joins).
+            dfs = dict(zip(in_scope, pool.map(self.read_table, in_scope)))
+            explicit = {
+                t: spec.where_clause.render()
+                for t, spec in enriched.items()
+                if spec.where_clause is not None and t in dfs
+            }
+            subsetted = apply_subsetting(
+                dfs, catalog, explicit, max_parallel_tables=self.max_parallel_tables
+            )
 
-        for level in levels:
-            todo = [t for t in level if t not in self.skipped_tables]
-            if not todo:
-                continue
-            with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as pool:
-                for table, count in pool.map(copy_one, todo):
+            def copy_one(table: str) -> tuple[str, int]:
+                spec = enriched[table]
+                # WHERE already applied during subsetting — compile columns/limit only.
+                df = apply_spec(subsetted[table], replace(spec, where_clause=None))
+                return table, self.write_table(table, df)
+
+            for level in levels:
+                for table, count in pool.map(copy_one, level):
                     results[table] = count
                     logger.info("Copied %s: %d rows", table, count)
         return results

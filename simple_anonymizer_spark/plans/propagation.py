@@ -8,23 +8,39 @@ Mirrors ``src/FilterPropagation.scala`` with two faithful implementations:
   single row crosses the wire (the reference's execution strategy and our
   JDBC-read strategy).
 * ``apply_subsetting`` — the Spark-native form over DataFrames: cross-table
-  propagation as **left-semi joins** against the parent's already-filtered
-  frame (transitivity falls out of processing tables in topological order),
-  and self-referencing closure as an **iterative fixpoint** of
+  propagation as **left-semi joins** against the filtered parent's pinned
+  *key set* (transitivity falls out of processing tables in topological
+  order), and self-referencing closure as an **iterative fixpoint** of
   semi-join/union steps matching the CTE semantics. NULL-FK semantics match
   SQL ``IN`` (rows with NULL FK drop under a cross-table parent filter;
   NULL-FK roots are kept by self-ref closure via the explicit
   ``fk IS NULL OR reachable`` disjunction).
 
-Scale notes: semi-joins let Catalyst pick broadcast when the filtered
-parent key set is small (the common case for subsetting — that's the whole
-point of subsetting); AQE converts to broadcast at runtime otherwise.
-Fixpoint iterations localCheckpoint the frontier to cut lineage growth;
-iteration count equals tree depth, and each step is a semi-join on the
-(already subsetted) table.
+Scale notes:
+
+* Key sets. A filtered table with cross-table children is read once into
+  the distinct projection of the columns its children reference, pinned
+  with an eager ``localCheckpoint``; it is key-sized, not row-sized.
+  Children semi-join the key set, never the parent's lazy plan, so no
+  descendant re-reads an ancestor. A filtered self-ref table pins one key
+  frame (self-ref PK/FK columns + child-referenced keys); the closures run
+  over that frame and the children's key set is derived from it after the
+  closures, with no further source read.
+* Scan bound. Each returned frame scans only its own source table (plus
+  checkpoints), so a whole copy scans each source table at most twice:
+  once for its key set, if it has one, and once for its write.
+* Tables of one topological level build their key sets concurrently.
+* Semi-joins let Catalyst pick broadcast when the key set is small (the
+  common case for subsetting — that's the whole point of subsetting); AQE
+  converts to broadcast at runtime otherwise.
+* Fixpoint iterations localCheckpoint the frontier to cut lineage growth;
+  iteration count equals tree depth, and each step is a semi-join on the
+  pinned key frame.
 """
 
 from __future__ import annotations
+
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -170,7 +186,9 @@ def self_ref_closure(
     Small filtered sets (<= ``driver_threshold`` key rows) compute the
     closure driver-side in one collect — the same philosophy as broadcast
     joins: a depth-D fixpoint costs ~3D Spark jobs, a BFS over collected
-    keys costs two. Large sets use the distributed fixpoint.
+    keys costs two. Large sets use the distributed fixpoint. Both paths
+    read ``base`` once per probe or step: ``apply_subsetting`` passes a
+    pinned key frame, so none of those reads reaches the source.
     """
     key_frame = base.select(*fk.pk_columns, *fk.fk_columns)
     # Bounded probe: one job, at most threshold+1 rows on the driver. A
@@ -246,10 +264,20 @@ def _keep_reachable(base: DataFrame, fk: LogicalFK, closure: DataFrame, tag: int
     return joined.where(keep).drop(*marker_cols)
 
 
+def _key_set(frame: DataFrame, cols: list[str], pk: frozenset[str]) -> DataFrame:
+    """Distinct ``cols`` projection, pinned. A projection that covers the
+    primary key is distinct already and skips the aggregation."""
+    keys = frame.select(*cols)
+    if not pk or not pk <= set(cols):
+        keys = keys.distinct()
+    return keys.localCheckpoint(eager=True)
+
+
 def apply_subsetting(
     dfs: dict[str, DataFrame],
     catalog: Catalog,
     explicit_where: dict[str, str],
+    max_parallel_tables: int = 8,
 ) -> dict[str, DataFrame]:
     """Return per-table DataFrames with explicit filters AND propagated
     FK subsetting applied — the Spark-native equivalent of the whole
@@ -257,30 +285,63 @@ def apply_subsetting(
 
     ``explicit_where`` values are raw Spark SQL fragments (matching the
     reference's opaque-string WHERE contract).
+
+    Key sets and self-ref closures are computed eagerly here, up to
+    ``max_parallel_tables`` tables of a level at a time (see the module's
+    scale notes); the returned frames are lazy and each scans only its own
+    source table plus checkpoints.
     """
     fks = [fk for fk in catalog.foreign_keys if fk.fk_table in dfs and fk.pk_table in dfs]
-    order = [t for level in sort_tables(list(dfs), fks) for t in level]
+    referenced: dict[str, list[str]] = {}
+    for fk in fks:
+        if not fk.is_self_ref:
+            cols = referenced.setdefault(fk.pk_table, [])
+            cols.extend(c for c in fk.pk_columns if c not in cols)
 
     out: dict[str, DataFrame] = dict(dfs)
-    has_filter: dict[str, bool] = {}
-    for table in order:
-        df = dfs[table]
-        eff = df
-        filtered = False
-        if table in explicit_where:
-            eff = eff.where(F.expr(explicit_where[table]))
-            filtered = True
-        for fk in catalog.fks_of_child(table):
-            if fk.is_self_ref:
-                continue
-            if has_filter.get(fk.pk_table):
-                eff = _semi_join(eff, out[fk.pk_table], fk)
-                filtered = True
-        base = eff
+    key_sets: dict[str, DataFrame] = {}
+
+    def subset_one(table: str) -> tuple[DataFrame, DataFrame | None]:
+        eff = dfs[table]
+        filtered = table in explicit_where
         if filtered:
-            for tag, fk in enumerate(catalog.self_ref_fks(table)):
-                closure = self_ref_closure(base, fk)
+            eff = eff.where(F.expr(explicit_where[table]))
+        self_fks = []
+        for fk in fks:
+            if fk.fk_table != table:
+                continue
+            if fk.is_self_ref:
+                self_fks.append(fk)
+            elif fk.pk_table in key_sets:
+                eff = _semi_join(eff, key_sets[fk.pk_table], fk)
+                filtered = True
+        child_cols = referenced.get(table)
+        if not filtered or not (self_fks or child_cols):
+            return eff, None
+        kept = eff
+        if self_fks:
+            frame_cols = list(dict.fromkeys(
+                [c for fk in self_fks for c in fk.pk_columns + fk.fk_columns]
+                + (child_cols or [])
+            ))
+            frame = eff.select(*frame_cols).localCheckpoint(eager=True)
+            kept = frame
+            for tag, fk in enumerate(self_fks):
+                closure = self_ref_closure(frame, fk)
                 eff = _keep_reachable(eff, fk, closure, tag)
-        out[table] = eff
-        has_filter[table] = filtered
+                kept = _keep_reachable(kept, fk, closure, tag)
+        if not child_cols:
+            return eff, None
+        pk = catalog.primary_keys.get(table, frozenset())
+        return eff, _key_set(kept, child_cols, pk)
+
+    levels = sort_tables(list(dfs), fks)
+    with ThreadPoolExecutor(max_workers=max_parallel_tables) as pool:
+        for level in levels:
+            # Drain the level before publishing its key sets: its tables
+            # read ``key_sets`` concurrently.
+            for table, (eff, keys) in zip(level, list(pool.map(subset_one, level))):
+                out[table] = eff
+                if keys is not None:
+                    key_sets[table] = keys
     return out

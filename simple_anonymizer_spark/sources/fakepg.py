@@ -598,10 +598,6 @@ class FakeConnection:
         return work
 
 
-def _oc_tuple(on_conflict_sql_parsed):
-    return on_conflict_sql_parsed
-
-
 def _unique_violation(state: _State, work_rows: list[dict], tdef: TableDef,
                       row: dict) -> tuple[str, tuple[str, ...], int] | None:
     """First violated unique constraint: (name, cols, index-of-existing)."""

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.on_conflict import OnConflict
 from ..plans.table_spec import TableSpec
-from .catalog import Catalog, LogicalFK, quote_identifier, quote_qualified
+from .catalog import Catalog, quote_identifier, quote_qualified
 
 logger = logging.getLogger(__name__)
 
@@ -387,12 +387,3 @@ def write_jdbc(
         conn.commit()
     finally:
         conn.close()
-
-
-def make_fk_name_catalog(fks: list[LogicalFK]) -> dict[str, list[str]]:
-    """table -> self-ref constraint names (deferral planning helper)."""
-    out: dict[str, list[str]] = {}
-    for fk in fks:
-        if fk.is_self_ref and fk.name:
-            out.setdefault(fk.fk_table, []).append(fk.name)
-    return out
