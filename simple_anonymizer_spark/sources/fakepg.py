@@ -162,6 +162,10 @@ class _State:
 class FakePostgres:
     """Schema builder + handle on the shared state file."""
 
+    # Read through spark.read.format(datasource_format)
+    # .options(**datasource_options()) — sources/pyds.py.
+    datasource_format = "fakepg"
+
     def __init__(self, path: str):
         self.path = str(path)
         if not os.path.exists(self.path):
@@ -233,6 +237,9 @@ class FakePostgres:
         with _locked(self.path) as state:
             fk = state.fks[name]
             return fk.deferrable, fk.initially_deferred
+
+    def datasource_options(self) -> dict[str, str]:
+        return {"path": self.path}
 
 
 def connect(path: str) -> "FakeConnection":

@@ -1,31 +1,36 @@
-"""JDBC (PostgreSQL) source & sink with the reference's transactional
-semantics, re-shaped for partitioned Spark execution.
+"""PostgreSQL SQL layer, snapshot coordinator and upsert sink with the
+reference's transactional semantics, re-shaped for partitioned Spark
+execution.
 
 Source (``src/CopyAction.scala:72-146``, ``src/DbCopier.scala:130-145``):
-  * per-table reads push the rendered ``SELECT ... WHERE ... [ORDER BY id
-    DESC] [LIMIT n]`` INTO the source as a ``dbtable`` subquery — PostgreSQL
-    does the filtering/subsetting before a row crosses the wire (including
-    propagated IN-subqueries and recursive CTEs from plans.propagation);
-  * snapshot pinning: the driver exports ``pg_export_snapshot()`` on a held
-    REPEATABLE READ coordinator connection; every partition connection runs
-    ``SET TRANSACTION SNAPSHOT '<id>'`` via Spark's ``sessionInitStatement``
-    so parallel partitioned reads see one point-in-time view;
-  * parallelism via ``partitionColumn/lowerBound/upperBound/numPartitions``.
+  * tables are read through the executor-side Python DataSource
+    ``spark.read.format("pgwire"|"fakepg")`` (``sources/pyds.py``), which
+    runs the ``render_select`` text below with the pushed ``where``
+    option and Spark-JDBC-style range partitions, one connection per
+    partition task;
+  * snapshot pinning: ``SnapshotCoordinator`` exports
+    ``pg_export_snapshot()`` on a held REPEATABLE READ connection; every
+    partition connection imports it (``SET TRANSACTION SNAPSHOT``, the
+    ``snapshot_id`` read option) so parallel partitioned reads see one
+    point-in-time view.
 
 Sink (``src/CopyAction.scala:92-235``, ``src/OnConflict.scala``):
-  * plain INSERT path = stock ``df.write.jdbc`` with ``batchsize``;
-  * upsert path = ``foreachPartition`` executing batched
-    ``INSERT ... ON CONFLICT`` (no native Spark upsert) — per-partition
-    transactions; retried tasks are idempotent under DO NOTHING/DO UPDATE;
+  * ``upsert_writer`` is the one partition loop: batched
+    ``INSERT ... [ON CONFLICT]`` in one transaction per partition;
+    retried tasks are idempotent under DO NOTHING/DO UPDATE.
+    ``write_jdbc`` runs it under ``foreachPartition``; the DataSource
+    writer (``df.write.format("pgwire"|"fakepg")``) calls it for every
+    write that cannot take the COPY path;
   * sequence reset (``src/TableCopier.scala:20-35``) and self-ref FK
     constraint deferral (``src/ConstraintDeferrer.scala:23-88``) are
-    driver-side JDBC brackets around the write job. Deferral matters MORE
+    driver-side brackets around the write job. Deferral matters MORE
     here than in the reference: partitioned parallel writes randomize
     parent/child insert order within a table.
 
-The wire layer needs a Postgres driver (psycopg2/pg8000) which this
-container does not ship — connection factories are injectable and the SQL
-renderers are pure functions, unit-tested without a database.
+Connections come from an injectable zero-arg ``connect`` factory
+(``pgwire.connect`` for a live server, ``fakepg.connect`` for the
+protocol-level fake), and the SQL renderers are pure functions,
+unit-tested without a database.
 """
 
 from __future__ import annotations
@@ -34,7 +39,7 @@ import logging
 from dataclasses import dataclass
 from typing import Any, Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..plans.on_conflict import OnConflict
 from ..plans.table_spec import TableSpec
@@ -53,18 +58,14 @@ def render_select(
     columns: list[str],
     schema: str = "public",
     where_sql: str | None = None,
-    limit: int | None = None,
 ) -> str:
-    """The source SELECT (``src/CopyAction.scala:72-84``): ORDER BY "id"
-    DESC before LIMIT only when the column list contains ``id``."""
+    """The source SELECT (``src/CopyAction.scala:72-84``). A spec's
+    ``LIMIT`` (with its ``ORDER BY "id" DESC``) is applied by
+    ``plans.compiler.apply_spec``, after the FK subsetting."""
     cols = ", ".join(quote_identifier(c) for c in columns)
     sql = f"SELECT {cols} FROM {quote_qualified(table, schema)}"
     if where_sql:
         sql += f" WHERE {where_sql}"
-    if limit is not None:
-        if "id" in columns:
-            sql += ' ORDER BY "id" DESC'
-        sql += f" LIMIT {limit}"
     return sql
 
 
@@ -123,8 +124,8 @@ def render_restore_constraint(
 # Catalog introspection queries (``src/DbContext.scala:49-118`` verbatim).
 COLUMNS_SQL = (
     # ORDER BY ordinal_position: declared column order is part of the
-    # contract (dbapi_reader's default projection, catalog.columns) — a
-    # real server returns arbitrary order without it.
+    # contract (the DataSource schema in pyds.introspect_types,
+    # catalog.columns) — a real server returns arbitrary order without it.
     "SELECT table_name, column_name, data_type FROM information_schema.columns "
     "WHERE table_schema = %s ORDER BY table_name, ordinal_position"
 )
@@ -203,7 +204,7 @@ def introspect_catalog(connect: Callable[[], Any], schema: str = "public") -> Ca
 
 
 # ---------------------------------------------------------------------------
-# Snapshot-pinned partitioned source
+# Snapshot coordinator
 # ---------------------------------------------------------------------------
 
 
@@ -234,56 +235,6 @@ class SnapshotCoordinator:
             self.connection.close()
 
 
-def jdbc_reader(
-    spark: SparkSession,
-    url: str,
-    properties: dict[str, str],
-    schema: str = "public",
-    snapshot_id: str | None = None,
-    fetch_size: int = 5000,
-    partition: tuple[str, int, int, int] | None = None,
-) -> Callable[..., DataFrame]:
-    """Source factory for DbCopier: reads render the full per-table SELECT
-    into a JDBC subquery. ``partition=(column, lower, upper, n)`` enables
-    parallel range reads the reference's single-cursor pipe never had."""
-
-    def read(table: str, columns: list[str] | None = None,
-             where_sql: str | None = None, limit: int | None = None) -> DataFrame:
-        if columns is None:
-            subquery = f"SELECT * FROM {quote_qualified(table, schema)}"
-            if where_sql:
-                subquery += f" WHERE {where_sql}"
-        else:
-            subquery = render_select(table, columns, schema, where_sql, limit)
-        reader = (
-            spark.read.format("jdbc")
-            .option("url", url)
-            .option("dbtable", f"({subquery}) AS __src")
-            .option("fetchsize", str(fetch_size))
-        )
-        if snapshot_id:
-            # Each partition connection pins the coordinator's snapshot
-            # before reading (reference: src/CopyAction.scala:131-141).
-            reader = reader.option(
-                "sessionInitStatement",
-                "BEGIN TRANSACTION ISOLATION LEVEL REPEATABLE READ; "
-                f"SET TRANSACTION SNAPSHOT '{snapshot_id}'",
-            )
-        if partition is not None:
-            col, lower, upper, n = partition
-            reader = (
-                reader.option("partitionColumn", col)
-                .option("lowerBound", str(lower))
-                .option("upperBound", str(upper))
-                .option("numPartitions", str(n))
-            )
-        for k, v in properties.items():
-            reader = reader.option(k, v)
-        return reader.load()
-
-    return read
-
-
 # ---------------------------------------------------------------------------
 # Upsert sink
 # ---------------------------------------------------------------------------
@@ -297,16 +248,18 @@ def upsert_writer(
     on_conflict: OnConflict | None = None,
     primary_key: list[str] | None = None,
     batch_size: int = TableSpec().batch_size,
-) -> Callable[[Iterator], None]:
+) -> Callable[[Iterator], int]:
     """Partition function executing batched INSERT [ON CONFLICT]: one
     transaction per partition, ``executemany`` every ``batch_size`` rows
-    (``src/CopyAction.scala:167-235``). Use with ``df.foreachPartition``.
-    ``connect`` must be picklable (e.g. a module-level factory closing over
-    a DSN string), since it runs executor-side."""
+    (``src/CopyAction.scala:167-235``); returns the rows written. Use with
+    ``df.foreachPartition``. ``connect`` must be picklable (e.g. a
+    module-level factory closing over a DSN string), since it runs
+    executor-side."""
     insert_sql = render_insert(table, columns, schema, on_conflict, primary_key)
 
-    def write_partition(rows: Iterator) -> None:
+    def write_partition(rows: Iterator) -> int:
         conn = connect()
+        n = 0
         try:
             cur = conn.cursor()
             batch = []
@@ -314,10 +267,13 @@ def upsert_writer(
                 batch.append(tuple(row[c] for c in columns))
                 if len(batch) >= batch_size:
                     cur.executemany(insert_sql, batch)
+                    n += len(batch)
                     batch.clear()
             if batch:
                 cur.executemany(insert_sql, batch)
+                n += len(batch)
             conn.commit()
+            return n
         except Exception:
             conn.rollback()
             raise
@@ -365,25 +321,31 @@ def write_jdbc(
         for constraint in self_ref_constraints:
             cur.execute(render_defer_constraint(table, constraint, schema))
         conn.commit()
-
-        df.foreachPartition(
-            upsert_writer(connect, table, columns, schema, on_conflict,
-                          primary_key, batch_size)
-        )
-
-        if catalog is not None:
-            for seq in catalog.sequences_of(table):
-                cur.execute(render_setval(seq.sequence_name, seq.column_name,
-                                          table, schema))
-        for constraint in self_ref_constraints:
-            # Best-effort restore to NOT DEFERRABLE default; failures are
-            # logged, not raised (src/ConstraintDeferrer.scala:45-65).
-            try:
-                cur.execute(render_restore_constraint(table, constraint, False,
-                                                      False, schema))
-            except Exception:  # pragma: no cover
-                logger.warning("Failed to restore constraint %s on %s",
-                               constraint, table, exc_info=True)
-        conn.commit()
+        try:
+            df.foreachPartition(
+                upsert_writer(connect, table, columns, schema, on_conflict,
+                              primary_key, batch_size)
+            )
+            if catalog is not None:
+                for seq in catalog.sequences_of(table):
+                    cur.execute(render_setval(seq.sequence_name,
+                                              seq.column_name, table, schema))
+        except BaseException:
+            # A failed setval aborts the transaction; the restore below
+            # needs a fresh one.
+            conn.rollback()
+            raise
+        finally:
+            # Restore to the NOT DEFERRABLE default whether or not the
+            # write succeeded; best-effort, failures are logged, not
+            # raised (src/ConstraintDeferrer.scala:45-65).
+            for constraint in self_ref_constraints:
+                try:
+                    cur.execute(render_restore_constraint(
+                        table, constraint, False, False, schema))
+                except Exception:  # pragma: no cover
+                    logger.warning("Failed to restore constraint %s on %s",
+                                   constraint, table, exc_info=True)
+            conn.commit()
     finally:
         conn.close()

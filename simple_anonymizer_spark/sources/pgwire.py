@@ -2,18 +2,20 @@
 protocol (frontend/backend protocol 3.0, simple-query flavor).
 
 Why it exists: the container ships a real PostgreSQL server but no Python
-driver (no psycopg2/pg8000), and the engine's whole JDBC-shaped layer —
-``introspect_catalog``, ``SnapshotCoordinator``, ``dbapi_reader``,
-``upsert_writer`` — talks DB-API through an injectable ``connect``
-factory. This module closes the last reference-parity gap the fake server
+driver (no psycopg2/pg8000), and the engine's whole Postgres layer —
+``introspect_catalog``, ``SnapshotCoordinator``, the
+``format("pgwire")`` DataSource (``sources/pyds.py``), ``upsert_writer``
+— talks DB-API through an injectable ``connect`` factory. This module
+closes the last reference-parity gap the fake server
 (``sources/fakepg.py``) cannot: the libpq WIRE FORMAT of a real session
 (reference integration tier: ``integration-tests/src/scala/
 simpleanonymizer/PostgresTestBase.scala:10-79`` runs against real
 Postgres via Testcontainers). ``tests/test_pg_live.py`` boots a real
 server and replays the integration suite through this client.
 
-Scope (deliberately small, test/driver bridge — NOT the 100 TB data
-path, which is parquet/JDBC):
+It is the wire client of every Postgres read and write the engine makes
+(``format("pgwire")`` partition tasks, ``write_jdbc``, the copy
+benchmark). Scope (deliberately small):
 
 * startup + trust or cleartext-password auth;
 * simple Query ('Q') messages only — multi-statement strings work, which
@@ -23,7 +25,7 @@ path, which is parquet/JDBC):
   server default since PG 9.1);
 * text-format results decoded by OID (int/float/numeric/bool/bytea,
   everything else — including timestamps and jsonb — surfaces as str,
-  matching the ``dbapi._spark_type`` contract);
+  matching the ``pyds._spark_type`` contract);
 * psycopg2-style transactions: ``autocommit`` False by default, an
   implicit BEGIN is sent before the first statement of a transaction
   (skipped when the statement itself starts one, so

@@ -1,20 +1,24 @@
-"""Spark 4 Python Data Source over the DB-API layer — executor-side
-partitioned reads from either backend: ``spark.read.format("fakepg")``
-(protocol-level fake, state-file path) or ``spark.read.format("pgwire")``
-(REAL PostgreSQL over the pure-Python v3 wire client,
-``sources/pgwire.py``).
+"""Spark 4 Python Data Source over the DB-API layer — the engine's one
+PostgreSQL source: executor-side partitioned reads from either backend,
+``spark.read.format("fakepg")`` (protocol-level fake, state-file path) or
+``spark.read.format("pgwire")`` (REAL PostgreSQL over the pure-Python v3
+wire client, ``sources/pgwire.py``).
 
-The ``dbapi_reader`` bridge fetches rows on the driver (fine for tests,
-a bottleneck by construction). This source moves the fetch into the
-workers through Spark's official Python Data Source API
+Reads go through Spark's official Python Data Source API
 (``pyspark.sql.datasource``, SPARK-44076): ``partitions()`` reproduces
-Spark JDBC's range-partitioning predicates (``dbapi.partition_clauses``),
-and each ``read(partition)`` opens its own connection INSIDE the task —
-the same per-partition-connection execution model the JDBC scan uses on
-a real cluster, including per-connection snapshot pinning
-(``SET TRANSACTION SNAPSHOT`` via ``dbapi.session_init_sql``), so every
+Spark JDBC's range-partitioning predicates (``partition_clauses``), and
+each ``read(partition)`` opens its own connection INSIDE the task — the
+per-partition-connection execution model of a JDBC scan on a real
+cluster, including per-connection snapshot pinning
+(``SET TRANSACTION SNAPSHOT`` via ``session_init_sql``), so every
 partition of a scan observes one point-in-time view regardless of
-concurrent writers (reference: ``src/DbCopier.scala:130-145``).
+concurrent writers (reference: ``src/DbCopier.scala:130-145``). Reads
+are lazy: every action on the DataFrame re-runs the scan, and each run
+imports the same snapshot.
+
+Column types come from the database itself through the
+``information_schema.columns`` contract (``jdbc.COLUMNS_SQL``), mapped to
+a Spark schema — no caller-side type declarations.
 
 Options (all strings, per the DataSource API):
 
@@ -35,8 +39,9 @@ and/or ``spark.dataSource.register(PGWireDataSource)``.
 from __future__ import annotations
 
 import functools
+import re
 from dataclasses import dataclass
-from typing import Callable, Iterator
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -48,13 +53,82 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .dbapi import (
-    _spark_type,
-    introspect_types,
-    partition_clauses,
-    session_init_sql,
-)
-from .jdbc import quote_qualified, render_insert, render_select
+from .catalog import quote_identifier, quote_qualified
+from .jdbc import COLUMNS_SQL, render_select, upsert_writer
+
+_TYPE_MAP: list[tuple[str, Callable[[re.Match], T.DataType]]] = [
+    (r"bigint|int8", lambda m: T.LongType()),
+    (r"integer|int4|int\b|smallint", lambda m: T.IntegerType()),
+    (r"numeric\((\d+),\s*(\d+)\)|decimal\((\d+),\s*(\d+)\)",
+     lambda m: T.DecimalType(int(m.group(1) or m.group(3)),
+                             int(m.group(2) or m.group(4)))),
+    (r"numeric|decimal", lambda m: T.DecimalType(38, 18)),
+    (r"double|float8|real", lambda m: T.DoubleType()),
+    (r"boolean|bool\b", lambda m: T.BooleanType()),
+]
+
+
+def _spark_type(pg_type: str) -> T.DataType:
+    for pattern, factory in _TYPE_MAP:
+        m = re.match(pattern, pg_type.strip().lower())
+        if m:
+            return factory(m)
+    return T.StringType()  # text / varchar / jsonb / timestamps-as-text
+
+
+def session_init_sql(snapshot_id: str) -> str:
+    """The statement pair every pinned partition connection runs before
+    its SELECT (reference: ``src/CopyAction.scala:131-141``)."""
+    return (
+        "BEGIN TRANSACTION ISOLATION LEVEL REPEATABLE READ; "
+        f"SET TRANSACTION SNAPSHOT '{snapshot_id}'"
+    )
+
+
+def partition_clauses(column: str, lower: int, upper: int, n: int) -> list[str]:
+    """Spark JDBC's range-partitioning predicates
+    (JDBCRelation.columnPartition): stride floor, first partition takes
+    ``< bound OR IS NULL``, last takes ``>= bound``."""
+    if n <= 1:
+        return [""]
+    stride = max((upper - lower) // n, 1)
+    q = quote_identifier(column)
+    clauses = []
+    bound = lower + stride
+    clauses.append(f"({q} < {bound} OR {q} IS NULL)")
+    for _ in range(n - 2):
+        clauses.append(f"({q} >= {bound} AND {q} < {bound + stride})")
+        bound += stride
+    clauses.append(f"({q} >= {bound})")
+    return clauses
+
+
+def introspect_types(connect: Callable[[], Any], schema: str = "public") -> dict[str, dict[str, str]]:
+    """table -> column -> database type, via the information_schema
+    contract (column order preserved)."""
+    conn = connect()
+    try:
+        cur = conn.cursor()
+        cur.execute(COLUMNS_SQL, (schema,))
+        out: dict[str, dict[str, str]] = {}
+        for table, col, dtype in cur.fetchall():
+            out.setdefault(table, {})[col] = dtype
+        return out
+    finally:
+        conn.close()
+
+
+def _select_sql(options, schema: T.StructType, *conjuncts: str) -> str:
+    """The scan's SELECT: the ``where`` option ANDed with ``conjuncts``
+    (a partition's range predicate, a stream's offset window)."""
+    parts = [c for c in (options.get("where"), *conjuncts) if c]
+    where = " AND ".join(
+        f"({c})" if len(parts) > 1 else c for c in parts
+    ) or None
+    return render_select(
+        options["table"], [f.name for f in schema.fields],
+        options.get("dbschema", "public"), where,
+    )
 
 
 def _connect_from_options(options) -> Callable:
@@ -111,7 +185,8 @@ class FakePGDataSource(DataSource):
 
     def writer(self, schema: T.StructType, overwrite: bool) -> "DbApiWriter":
         """``df.write.format("fakepg"/"pgwire")`` — executor-side batched
-        INSERT [ON CONFLICT], one connection + one transaction per
+        INSERT [ON CONFLICT] (``jdbc.upsert_writer``; COPY for plain
+        appends on a live server), one connection + one transaction per
         partition (partition-atomic, not job-atomic — the same contract
         as Spark's own JDBC sink). ``mode("overwrite")`` clears the
         target table driver-side before the tasks launch.
@@ -163,16 +238,8 @@ class DbApiReader(DataSourceReader):
     def read(self, partition: _RangePartition) -> Iterator[tuple]:
         # Runs in the executor's Python worker: one connection per task,
         # exactly like a JDBC partition scan.
-        options, schema = self.options, self.spark_schema
-        cols = [f.name for f in schema.fields]
-        conjuncts = [c for c in (options.get("where"), partition.clause) if c]
-        where = " AND ".join(
-            f"({c})" if len(conjuncts) > 1 else c for c in conjuncts
-        ) or None
-        sql = render_select(
-            options["table"], cols, options.get("dbschema", "public"),
-            where, None,
-        )
+        options = self.options
+        sql = _select_sql(options, self.spark_schema, partition.clause)
         conn = _connect_from_options(options)()
         try:
             cur = conn.cursor()
@@ -197,61 +264,34 @@ class DbApiWriter(DataSourceWriter):
         self.spark_schema = schema
 
     def write(self, iterator: Iterator) -> _WriteResult:
-        # Executor-side: one connection and one transaction per
-        # partition; batched executemany like jdbc.upsert_writer.
-        options, schema = self.options, self.spark_schema
-        cols = [f.name for f in schema.fields]
+        # Executor-side: one connection and one transaction per partition.
+        options = self.options
+        cols = [f.name for f in self.spark_schema.fields]
+        table = options["table"]
+        dbschema = options.get("dbschema", "public")
+        batch_size = int(options.get("batch_size", "1000"))
         oc = None
-        oc_mode = options.get("on_conflict")
         pk: list[str] = []
+        oc_mode = options.get("on_conflict")
         if oc_mode:
             from ..plans.on_conflict import OnConflict
 
             oc = OnConflict(action=oc_mode)
             pk = [c.strip() for c in options.get("primary_key", "").split(",")
                   if c.strip()]
-        insert_sql = render_insert(
-            options["table"], cols, options.get("dbschema", "public"),
-            oc, pk,
-        )
-        batch_size = int(options.get("batch_size", "1000"))
         conn = _connect_from_options(options)()
-        n = 0
         # Plain appends on a backend with the COPY sub-protocol take the
-        # bulk path automatically (~10x: one round trip per chunk, rows
-        # parsed straight into the heap). ON CONFLICT must INSERT.
-        use_copy = (
-            oc is None
-            and hasattr(conn, "copy_in")
-            and options.get("use_copy", "true").lower() != "false"
-        )
-        if use_copy:
-            try:
-                n = conn.copy_in(
-                    options["table"], cols,
-                    (tuple(row[c] for c in cols) for row in iterator),
-                    schema=options.get("dbschema", "public"),
-                    chunk_rows=batch_size,
-                )
-                conn.commit()
-            except Exception:
-                conn.rollback()
-                raise
-            finally:
-                conn.close()
-            return _WriteResult(n_rows=n)
+        # bulk path (~10x: one round trip per chunk, rows parsed straight
+        # into the heap). ON CONFLICT must INSERT.
+        if oc is not None or not hasattr(conn, "copy_in"):
+            write_partition = upsert_writer(
+                lambda: conn, table, cols, dbschema, oc, pk, batch_size)
+            return _WriteResult(n_rows=write_partition(iterator))
         try:
-            cur = conn.cursor()
-            batch = []
-            for row in iterator:
-                batch.append(tuple(row[c] for c in cols))
-                if len(batch) >= batch_size:
-                    cur.executemany(insert_sql, batch)
-                    n += len(batch)
-                    batch.clear()
-            if batch:
-                cur.executemany(insert_sql, batch)
-                n += len(batch)
+            n = conn.copy_in(
+                table, cols, (tuple(row[c] for c in cols) for row in iterator),
+                schema=dbschema, chunk_rows=batch_size,
+            )
             conn.commit()
         except Exception:
             conn.rollback()
@@ -267,10 +307,6 @@ class DbApiWriter(DataSourceWriter):
     def abort(self, messages) -> None:
         # Committed partitions stay (partition-atomic contract).
         return None
-
-
-# Back-compat alias (round-3 name).
-FakePGReader = DbApiReader
 
 
 class DbApiSimpleStreamReader(SimpleDataSourceStreamReader):
@@ -307,17 +343,8 @@ class DbApiSimpleStreamReader(SimpleDataSourceStreamReader):
         return {"watermark": int(self.options.get("start_offset", "0"))}
 
     def _fetch(self, where: str) -> list[tuple]:
-        options = self.options
-        cols = [f.name for f in self.spark_schema.fields]
-        conjuncts = [c for c in (options.get("where"), where) if c]
-        clause = " AND ".join(
-            f"({c})" if len(conjuncts) > 1 else c for c in conjuncts
-        ) or None
-        sql = render_select(
-            options["table"], cols, options.get("dbschema", "public"),
-            clause, None,
-        )
-        conn = _connect_from_options(options)()
+        sql = _select_sql(self.options, self.spark_schema, where)
+        conn = _connect_from_options(self.options)()
         try:
             cur = conn.cursor()
             cur.execute(sql + f" ORDER BY {self.offset_col}")

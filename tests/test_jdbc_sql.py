@@ -20,18 +20,8 @@ def test_quote_identifier_hostile_names():
 def test_render_select_plain():
     sql = jdbc.render_select("users", ["id", "name"])
     assert sql == 'SELECT "id", "name" FROM "public"."users"'
-
-
-def test_render_select_where_limit_with_id():
-    # CopyAction.scala:78-83: ORDER BY "id" DESC only when id is selected.
-    sql = jdbc.render_select("users", ["id", "name"], where_sql="id > 5", limit=10)
-    assert sql == ('SELECT "id", "name" FROM "public"."users" '
-                   'WHERE id > 5 ORDER BY "id" DESC LIMIT 10')
-
-
-def test_render_select_limit_without_id():
-    sql = jdbc.render_select("users", ["name"], limit=10)
-    assert sql == 'SELECT "name" FROM "public"."users" LIMIT 10'
+    sql = jdbc.render_select("users", ["id", "name"], where_sql="id > 5")
+    assert sql == 'SELECT "id", "name" FROM "public"."users" WHERE id > 5'
 
 
 def test_render_insert_plain():
@@ -161,8 +151,8 @@ def test_upsert_writer_batches_with_fake_connection():
         lambda: FakeConn(), "users", ["id", "name"],
         on_conflict=OnConflict.do_nothing("id"), batch_size=2,
     )
-    write(iter([{"id": 1, "name": "a"}, {"id": 2, "name": "b"},
-                {"id": 3, "name": "c"}]))
+    assert write(iter([{"id": 1, "name": "a"}, {"id": 2, "name": "b"},
+                       {"id": 3, "name": "c"}])) == 3
     batches = [e for e in executed if e[0] != "COMMIT"]
     assert len(batches) == 2          # 2 + 1 rows
     assert batches[0][1] == [(1, "a"), (2, "b")]

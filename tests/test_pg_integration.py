@@ -5,7 +5,9 @@ Ports the reference's live-Postgres integration assertions —
 ``integration-tests/src/scala/simpleanonymizer/DbCopierIntegrationTest.scala``
 and ``TableCopierIntegrationTest.scala`` — onto the real product write
 path: ``introspect_catalog`` over the pg_catalog contract,
-``SnapshotCoordinator`` + pinned partitioned reads, ``DbCopier`` →
+``SnapshotCoordinator`` + pinned partitioned reads through the engine's
+one Postgres source (``spark.read.format("fakepg")``, the DataSource the
+copy benchmark reads through as ``format("pgwire")``), ``DbCopier`` →
 ``write_jdbc`` → ``df.foreachPartition`` executing batched
 ``INSERT ... ON CONFLICT`` in executor processes, sequence resets, and
 self-ref constraint deferral. The fixture schema/data mirror the
@@ -26,7 +28,6 @@ from simple_anonymizer_spark.plans.db_copier import DbCopier
 from simple_anonymizer_spark.plans.on_conflict import OnConflict
 from simple_anonymizer_spark.plans.table_copier import copy_table
 from simple_anonymizer_spark.sources import fakepg
-from simple_anonymizer_spark.sources.dbapi import dbapi_reader
 from simple_anonymizer_spark.sources.fakepg import FakePostgres, IntegrityError
 from simple_anonymizer_spark.sources.jdbc import (
     SnapshotCoordinator,
@@ -35,6 +36,7 @@ from simple_anonymizer_spark.sources.jdbc import (
     upsert_writer,
     write_jdbc,
 )
+from simple_anonymizer_spark.sources.pyds import FakePGDataSource, PGWireDataSource
 
 # ---------------------------------------------------------------------------
 # Fixture database: the reference's integration schema + data
@@ -177,14 +179,30 @@ ALL_TABLES = ("users", "orders", "categories", "order_items", "employees",
               "tree_nodes", "profiles")
 
 
+def table_reader(spark, db, **options):
+    """``read(table) -> DataFrame`` through the engine's Postgres source,
+    ``spark.read.format(db.datasource_format)`` (``fakepg`` or
+    ``pgwire``), with extra read ``options`` (``snapshot_id``, ``where``,
+    range partitioning). Reads are lazy: each action re-runs the scan."""
+    spark.dataSource.register(FakePGDataSource)
+    spark.dataSource.register(PGWireDataSource)
+    base = {**db.datasource_options(),
+            **{k: str(v) for k, v in options.items()}}
+
+    def read(table):
+        return (spark.read.format(db.datasource_format).options(**base)
+                .option("table", table).load())
+
+    return read
+
+
 def make_copier(spark, source_db, target_db, specs, skipped=frozenset()):
-    """Wire DbCopier to the fake through the product's own layers."""
+    """Wire DbCopier to the backend through the product's own layers."""
     src_connect = source_db.connect_factory()
     tgt_connect = target_db.connect_factory()
     catalog = introspect_catalog(src_connect)
     coordinator = SnapshotCoordinator.export(src_connect)
-    read = dbapi_reader(spark, src_connect,
-                        snapshot_id=coordinator.snapshot_id)
+    read = table_reader(spark, source_db, snapshot_id=coordinator.snapshot_id)
 
     def write_table(table, df):
         n = df.count()
@@ -198,7 +216,7 @@ def make_copier(spark, source_db, target_db, specs, skipped=frozenset()):
         )
         return n
 
-    copier = DbCopier(catalog, lambda t: read(t), write_table,
+    copier = DbCopier(catalog, read, write_table,
                       skipped_tables=set(skipped))
     return copier, coordinator, tgt_connect
 
@@ -560,7 +578,7 @@ def single_table_env(spark, source_db, target_db):
     src_connect = source_db.connect_factory()
     tgt_connect = target_db.connect_factory()
     catalog = introspect_catalog(src_connect)
-    read = dbapi_reader(spark, src_connect)
+    read = table_reader(spark, source_db)
 
     def write_for(spec):
         def write_table(table, df):
@@ -631,9 +649,8 @@ def hostile_identifier_body(spark, src, tgt_db):
     src.load(table, [{"id": 1, column: "test data 1"},
                      {"id": 2, column: "test data 2"}])
 
-    src_connect = src.connect_factory()
     tgt_connect = tgt_db.connect_factory()
-    read = dbapi_reader(spark, src_connect)
+    read = table_reader(spark, src)
 
     def write_table(t, df):
         n = df.count()
@@ -678,27 +695,25 @@ def test_snapshot_pinned_partitioned_reads(spark, source_db):
         conn.commit()
         conn.close()
 
-        pinned = dbapi_reader(spark, src_connect,
-                              snapshot_id=coord.snapshot_id,
-                              partition=("id", 1, 10, 3))
+        pinned = table_reader(spark, source_db, snapshot_id=coord.snapshot_id,
+                              partition_column="id", lower=1, upper=10,
+                              num_partitions=3)
         df = pinned("users")
+        assert df.rdd.getNumPartitions() == 3
         assert df.count() == 10
         assert df.filter("id = 999").count() == 0
 
-        fresh = dbapi_reader(spark, src_connect)
+        fresh = table_reader(spark, source_db)
         assert fresh("users").count() == 11
     finally:
         coord.close()
 
 
 def test_pushdown_select_rendering(spark, source_db):
-    """Subquery pushdown semantics: WHERE/ORDER BY id DESC/LIMIT run inside
-    the database (src/CopyAction.scala:72-84)."""
-    read = dbapi_reader(spark, source_db.connect_factory())
-    df = read("users", columns=["id", "email"], where_sql="id <= 8", limit=2)
-    rows = sorted((r.id, r.email) for r in df.collect())
-    # ORDER BY "id" DESC LIMIT 2 over ids 1..8 -> 7, 8
-    assert [r[0] for r in rows] == [7, 8]
+    """WHERE pushdown: the ``where`` read option runs inside the database
+    (src/CopyAction.scala:72-84)."""
+    df = table_reader(spark, source_db, where="id <= 8")("users")
+    assert sorted(r.id for r in df.collect()) == list(range(1, 9))
 
 
 def test_upsert_idempotent_under_task_retry(source_db, target_db):
@@ -759,15 +774,61 @@ def test_transaction_rollback_on_partition_failure(source_db, target_db):
     assert q1(tgt, "SELECT COUNT(*) FROM users") == [(0,)]
 
 
-def test_dbapi_reader_limit_disables_partitioning(spark, source_db):
-    """LIMIT and range partitioning don't compose (matching Spark JDBC):
-    a limited read must run as one query so ORDER BY id DESC LIMIT n is
-    globally correct, not per-partition."""
-    read = dbapi_reader(spark, source_db.connect_factory(),
-                        partition=("id", 1, 10, 4))
-    rows = read("users", columns=["id"], limit=3).collect()
-    assert sorted(r.id for r in rows) == [8, 9, 10]  # global top-3 by id desc
+def test_partitioned_read_covers_every_row_once(spark, source_db):
+    """Range partitioning (Spark JDBC's columnPartition predicates: the
+    first partition also takes NULLs, the last is unbounded) reads every
+    row exactly once."""
+    df = table_reader(spark, source_db, partition_column="id", lower=1,
+                      upper=10, num_partitions=4)("users")
+    assert df.rdd.getNumPartitions() == 4
+    assert sorted(r.id for r in df.collect()) == list(range(1, 11))
 
-    # partitioned full read still covers everything exactly once
-    full = read("users", columns=["id"]).collect()
-    assert sorted(r.id for r in full) == list(range(1, 11))
+
+def test_failed_write_restores_self_ref_deferral(spark, target_db):
+    """write_jdbc restores a self-ref FK it deferred even when the write
+    fails (src/ConstraintDeferrer.scala:45-65): a duplicate key with no
+    ON CONFLICT fails the partition, and the constraint must be back to
+    NOT DEFERRABLE afterwards."""
+    tgt = target_db.connect_factory()
+    dup = spark.createDataFrame(
+        [(1, "Electronics", None, None), (1, "Again", None, None)],
+        "id int, name string, owner_id int, parent_id int",
+    )
+    with pytest.raises(Exception, match="categories_pkey"):
+        write_jdbc(dup, tgt, "categories", primary_key=["id"],
+                   catalog=introspect_catalog(tgt))
+    assert target_db.constraint_state("categories_parent_id_fkey") == (False, False)
+    assert q1(tgt, "SELECT COUNT(*) FROM categories") == [(0,)]
+
+
+def test_snapshot_covers_every_read_of_a_copy(spark, source_db, target_db):
+    """src/DbCopier.scala:130-145 for a whole copy: reads are lazy, and a
+    table with a key set is read twice (key set, then write), so rows
+    committed after the export must stay invisible to every read."""
+    specs = full_specs()
+    specs["users"] = specs["users"].where("id <> 2")
+    copier, coord, tgt = make_copier(spark, source_db, target_db, specs)
+    src = source_db.connect_factory()
+    conn = src()
+    cur = conn.cursor()
+    cur.execute('INSERT INTO "public"."users" ("id", "first_name", "last_name", "email") '
+                "VALUES (%s, %s, %s, %s)", (11, "Late", "Writer", "late@x.y"))
+    cur.execute('INSERT INTO "public"."orders" ("id", "user_id", "total", "status") '
+                "VALUES (%s, %s, %s, %s)", (100, 1, "1.00", "late"))
+    cur.execute('INSERT INTO "public"."order_items" ("id", "order_id", "category_id", '
+                '"product_name", "quantity") VALUES (%s, %s, %s, %s, %s)',
+                (100, 1, 1, "Late Item", 1))
+    conn.commit()
+    conn.close()
+    try:
+        result = copier.run(specs)
+    finally:
+        coord.close()
+    assert q1(src, "SELECT COUNT(*) FROM users") == [(11,)]
+
+    users = [u[0] for u in USERS if u[0] != 2]
+    orders = [o[0] for o in ORDERS if o[1] != 2]
+    assert result["users"] == len(users) and result["orders"] == len(orders)
+    assert sorted(r[0] for r in q1(tgt, "SELECT id FROM users")) == users
+    assert sorted(r[0] for r in q1(tgt, "SELECT id FROM orders")) == orders
+    assert q1(tgt, "SELECT COUNT(*) FROM order_items WHERE id = 100") == [(0,)]

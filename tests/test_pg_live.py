@@ -119,7 +119,10 @@ class LivePG:
     """One database on the live server, with the schema-building surface
     the integration suite's fixtures drive (``create_table``,
     ``add_foreign_key``, ``load``) plus the shared backend contract
-    (``connect`` / ``connect_factory`` / ``constraint_state``)."""
+    (``connect`` / ``connect_factory`` / ``constraint_state`` /
+    ``datasource_format`` / ``datasource_options``)."""
+
+    datasource_format = "pgwire"
 
     def __init__(self, server: dict, dbname: str):
         self.server = server
@@ -148,6 +151,10 @@ class LivePG:
             return row
         finally:
             conn.close()
+
+    def datasource_options(self) -> dict[str, str]:
+        return {"host": self.server["host"], "port": str(self.server["port"]),
+                "user": self.server["user"], "database": self.dbname}
 
     # -- fixture-building surface ------------------------------------------
 
@@ -329,8 +336,16 @@ def test_transaction_rollback_on_partition_failure(source_db, target_db):
     T.test_transaction_rollback_on_partition_failure(source_db, target_db)
 
 
-def test_dbapi_reader_limit_disables_partitioning(spark, source_db):
-    T.test_dbapi_reader_limit_disables_partitioning(spark, source_db)
+def test_partitioned_read_covers_every_row_once(spark, source_db):
+    T.test_partitioned_read_covers_every_row_once(spark, source_db)
+
+
+def test_failed_write_restores_self_ref_deferral(spark, target_db):
+    T.test_failed_write_restores_self_ref_deferral(spark, target_db)
+
+
+def test_snapshot_covers_every_read_of_a_copy(spark, source_db, target_db):
+    T.test_snapshot_covers_every_read_of_a_copy(spark, source_db, target_db)
 
 
 def test_pyds_executor_side_scan_real_server(spark, source_db):
@@ -356,10 +371,7 @@ def test_pyds_executor_side_scan_real_server(spark, source_db):
 
         reader = (
             spark.read.format("pgwire")
-            .option("host", source_db.server["host"])
-            .option("port", str(source_db.server["port"]))
-            .option("user", source_db.server["user"])
-            .option("database", source_db.dbname)
+            .options(**source_db.datasource_options())
             .option("table", "users")
             .option("partition_column", "id")
             .option("lower", "1").option("upper", "10")
@@ -373,10 +385,7 @@ def test_pyds_executor_side_scan_real_server(spark, source_db):
 
         fresh = (
             spark.read.format("pgwire")
-            .option("host", source_db.server["host"])
-            .option("port", str(source_db.server["port"]))
-            .option("user", source_db.server["user"])
-            .option("database", source_db.dbname)
+            .options(**source_db.datasource_options())
             .option("table", "users")
         ).load()
         assert fresh.count() == 11
@@ -461,17 +470,11 @@ def test_live_pyds_write_uses_copy_fast_path(spark, target_db):
         "id long, first_name string, last_name string, email string",
     )
     (df.write.format("pgwire")
-       .option("host", target_db.server["host"])
-       .option("port", str(target_db.server["port"]))
-       .option("user", target_db.server["user"])
-       .option("database", target_db.dbname)
+       .options(**target_db.datasource_options())
        .option("table", "users")
        .mode("append").save())
     back = (spark.read.format("pgwire")
-            .option("host", target_db.server["host"])
-            .option("port", str(target_db.server["port"]))
-            .option("user", target_db.server["user"])
-            .option("database", target_db.dbname)
+            .options(**target_db.datasource_options())
             .option("table", "users").load())
     assert back.count() == 300
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))

@@ -1,5 +1,5 @@
 """Spark 4 Python Data Source over the fake-PG layer (sources/pyds.py):
-spark.read.format("fakepg") must match the driver-side dbapi bridge,
+spark.read.format("fakepg") must match a direct DB-API cursor SELECT,
 honor range partitioning with executor-side per-partition connections,
 push WHERE text, and pin snapshots against concurrent writers."""
 
@@ -7,10 +7,9 @@ from __future__ import annotations
 
 import pytest
 
-from simple_anonymizer_spark.sources.dbapi import dbapi_reader
 from simple_anonymizer_spark.sources.pyds import FakePGDataSource
 
-from test_pg_integration import source_db  # noqa: F401 (fixture)
+from test_pg_integration import source_db, table_reader  # noqa: F401 (fixture)
 
 
 @pytest.fixture()
@@ -20,14 +19,7 @@ def registered(spark):
 
 
 def _read(spark, db, table, **opts):
-    r = (
-        spark.read.format("fakepg")
-        .option("path", db.path)
-        .option("table", table)
-    )
-    for k, v in opts.items():
-        r = r.option(k, str(v))
-    return r.load()
+    return table_reader(spark, db, **opts)(table)
 
 
 def test_full_scan_matches_dbapi_bridge(registered, source_db):
@@ -36,8 +28,11 @@ def test_full_scan_matches_dbapi_bridge(registered, source_db):
     spark = registered
     df = _read(spark, source_db, "users")
     got = sorted(tuple(r) for r in df.collect())
-    bridge = dbapi_reader(spark, lambda: fakepg.connect(source_db.path))
-    exp = sorted(tuple(r) for r in bridge("users").collect())
+    conn = fakepg.connect(source_db.path)
+    cur = conn.cursor()
+    cur.execute('SELECT "id", "first_name", "last_name", "email" FROM "public"."users"')
+    exp = sorted(tuple(r) for r in cur.fetchall())
+    conn.close()
     assert got == exp
     assert df.columns == ["id", "first_name", "last_name", "email"]
 
