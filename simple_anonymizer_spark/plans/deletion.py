@@ -8,9 +8,9 @@ them". The propagation loop is the same topological walk, but the NULL
 convention differs from subsetting's strict ``IN``: SQL ``ON DELETE
 CASCADE`` touches only children whose FK actually references a deleted
 parent, so a NULL-FK child always survives — every edge propagates
-``fk IS NULL OR fk IN (surviving parents)``. Self-referencing FKs reuse
-the subsetting closure (``self_ref_closure``), whose keep-rule already
-is that disjunction.
+``fk IS NULL OR fk IN (surviving parents)``, the same keep-rule
+(``keep_if_parent_in``) subsetting applies to its self-ref closures.
+Self-referencing FKs reuse the subsetting closure (``self_ref_closure``).
 
 The seed predicate is likewise SQL-DELETE-shaped: rows where the delete
 predicate evaluates to NULL are NOT deleted (``NOT coalesce(φ, false)``).
@@ -28,30 +28,9 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.catalog import Catalog, LogicalFK
-from .propagation import _all_null, _keep_reachable, self_ref_closure
+from ..sources.catalog import Catalog
+from .propagation import keep_if_parent_in, self_ref_closure
 from .table_sorter import sort_tables
-
-_PRESENT = "__del_parent_present"
-
-
-def _keep_if_parent_survives(
-    child: DataFrame, parent: DataFrame, fk: LogicalFK
-) -> DataFrame:
-    """``fk IS NULL OR fk IN (surviving parent keys)`` as one left join
-    (single pass over the child; the key set deduplicates first)."""
-    keys = parent.select(
-        *[F.col(pk).alias(f"__pk_{i}") for i, pk in enumerate(fk.pk_columns)]
-    ).distinct().withColumn(_PRESENT, F.lit(True))
-    cond = None
-    for i, fkc in enumerate(fk.fk_columns):
-        eq = child[fkc] == keys[f"__pk_{i}"]
-        cond = eq if cond is None else cond & eq
-    kept = child.join(keys, cond, "left_outer").where(
-        F.col(_PRESENT).isNotNull() | _all_null(child, list(fk.fk_columns))
-    )
-    return kept.select(*[child[c] for c in child.columns])
-
 
 def cascade_delete(
     dfs: dict[str, DataFrame],
@@ -81,12 +60,12 @@ def cascade_delete(
             if fk.is_self_ref:
                 continue
             if touched.get(fk.pk_table):
-                eff = _keep_if_parent_survives(eff, out[fk.pk_table], fk)
+                parent_keys = out[fk.pk_table].select(*fk.pk_columns).distinct()
+                eff = keep_if_parent_in(eff, parent_keys, fk)
                 hit = True
         if hit:
-            for tag, fk in enumerate(catalog.self_ref_fks(table)):
-                closure = self_ref_closure(eff, fk)
-                eff = _keep_reachable(eff, fk, closure, tag)
+            for fk in catalog.self_ref_fks(table):
+                eff = keep_if_parent_in(eff, self_ref_closure(eff, fk), fk)
         out[table] = eff
         touched[table] = hit
     return out

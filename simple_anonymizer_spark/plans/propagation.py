@@ -1,20 +1,21 @@
 """FK filter propagation — subsetting children to match filtered parents.
 
-Mirrors ``src/FilterPropagation.scala`` with two faithful implementations:
+Mirrors ``src/FilterPropagation.scala`` in two forms:
 
 * ``compute_propagated_filters`` — the reference's SQL-string form (IN
-  subqueries + WITH RECURSIVE CTEs). Used for golden-parity tests and for
-  pushing subsetting INTO a JDBC source so PostgreSQL subsets before a
-  single row crosses the wire (the reference's execution strategy and our
-  JDBC-read strategy).
-* ``apply_subsetting`` — the Spark-native form over DataFrames: cross-table
-  propagation as **left-semi joins** against the filtered parent's pinned
-  *key set* (transitivity falls out of processing tables in topological
-  order), and self-referencing closure as an **iterative fixpoint** of
-  semi-join/union steps matching the CTE semantics. NULL-FK semantics match
-  SQL ``IN`` (rows with NULL FK drop under a cross-table parent filter;
-  NULL-FK roots are kept by self-ref closure via the explicit
-  ``fk IS NULL OR reachable`` disjunction).
+  subqueries + WITH RECURSIVE CTEs). The copy never executes it: it is
+  the reference that the golden tests render and that
+  ``tests/test_propagation_equivalence.py`` runs in DuckDB against
+  ``apply_subsetting`` on randomized schemas.
+* ``apply_subsetting`` — the Spark execution path over DataFrames:
+  cross-table propagation as **left-semi joins** against the filtered
+  parent's pinned *key set* (transitivity falls out of processing tables
+  in topological order), and self-referencing closure as the reference's
+  recursive CTE run by Spark's own ``WITH RECURSIVE``
+  (``self_ref_closure``). NULL-FK semantics match SQL ``IN`` (rows with
+  NULL FK drop under a cross-table parent filter; NULL-FK roots are kept
+  by self-ref closure via the explicit ``fk IS NULL OR reachable``
+  disjunction, ``keep_if_parent_in``).
 
 Scale notes:
 
@@ -33,14 +34,20 @@ Scale notes:
 * Semi-joins let Catalyst pick broadcast when the key set is small (the
   common case for subsetting — that's the whole point of subsetting); AQE
   converts to broadcast at runtime otherwise.
-* Fixpoint iterations localCheckpoint the frontier to cut lineage growth;
-  iteration count equals tree depth, and each step is a semi-join on the
-  pinned key frame.
+* Self-ref closure. A filtered set of at most 50k key rows closes on the
+  driver: one bounded probe collects its (pk, fk) tuples and a BFS walks
+  them. A larger set runs one recursive CTE over the pinned key frame:
+  Spark joins the frame once per tree level (at most 200 levels), and the
+  distinct result is pinned by the job that computes it. There is no
+  Python loop and no per-level checkpoint; on small frames the BFS still
+  wins, since each CTE level costs a Spark job.
 """
 
 from __future__ import annotations
 
+import operator
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -50,7 +57,7 @@ from .table_sorter import sort_tables
 from .table_spec import WhereClause
 
 # ---------------------------------------------------------------------------
-# SQL-string form (reference parity; JDBC pushdown)
+# SQL-string form (the reference; executed by the equivalence tests)
 # ---------------------------------------------------------------------------
 
 
@@ -152,87 +159,105 @@ def compute_propagated_filters(
 # ---------------------------------------------------------------------------
 
 
-def _semi_join(child: DataFrame, parent: DataFrame, fk: LogicalFK) -> DataFrame:
-    """Child rows whose FK tuple exists in the (filtered) parent's PK set."""
+def _quoted(name: str) -> str:
+    """``name`` as a Spark column reference that takes dots, spaces and
+    backticks literally."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _fk_join(child: DataFrame, parent: DataFrame, fk: LogicalFK, how: str) -> DataFrame:
+    """``child`` joined on its FK tuple to ``parent``'s PK tuple; the PK
+    columns come along as ``__pk_{i}`` unless ``how`` is a semi-join."""
     keys = parent.select(
-        *[F.col(pk).alias(f"__pk_{i}") for i, pk in enumerate(fk.pk_columns)]
+        *[F.col(_quoted(pk)).alias(f"__pk_{i}") for i, pk in enumerate(fk.pk_columns)]
     )
-    cond = None
-    for i, fkc in enumerate(fk.fk_columns):
-        eq = child[fkc] == keys[f"__pk_{i}"]
-        cond = eq if cond is None else cond & eq
-    return child.join(keys, cond, "left_semi")
+    cond = reduce(operator.and_, [
+        child[_quoted(fkc)] == keys[f"__pk_{i}"]
+        for i, fkc in enumerate(fk.fk_columns)
+    ])
+    return child.join(keys, cond, how)
 
 
-def _all_null(df: DataFrame, cols: list[str]) -> Column:
-    cond = None
-    for c in cols:
-        n = F.col(c).isNull()
-        cond = n if cond is None else cond & n
-    return cond
+def _all_null(cols: list[str]) -> Column:
+    return reduce(operator.and_, [F.col(_quoted(c)).isNull() for c in cols])
+
+
+def keep_if_parent_in(child: DataFrame, keys: DataFrame, fk: LogicalFK) -> DataFrame:
+    """``fk IS NULL OR (fk) IN keys`` as one left join. ``keys`` must hold
+    distinct PK tuples (a closure, or the surviving parents' keys), so no
+    child row multiplies."""
+    markers = [f"__pk_{i}" for i in range(len(fk.pk_columns))]
+    joined = _fk_join(child, keys, fk, "left")
+    keep = F.col(markers[0]).isNotNull() | _all_null(fk.fk_columns)
+    return joined.where(keep).drop(*markers)
+
+
+def _closure_sql(n: int) -> str:
+    """The reference's recursive CTE (``src/FilterPropagation.scala:44-49``)
+    over a key frame ``{k}`` with positional PK columns ``p0…`` and FK
+    columns ``f0…``, so no user identifier enters the SQL text. Spark
+    rejects ``UNION`` here; ``UNION ALL`` is exact because each row has
+    one parent tuple, so each reachable row arrives once and a cycle is
+    never reached from a NULL root. ``LIMIT ALL`` lifts the session's
+    ``spark.sql.cteRecursionRowLimit``; ``MAX RECURSION LEVEL`` its
+    level limit."""
+    pks = ", ".join(f"p{i}" for i in range(n))
+    roots = " AND ".join(f"f{i} IS NULL" for i in range(n))
+    step = " AND ".join(f"t.f{i} = r.p{i}" for i in range(n))
+    return (
+        f"WITH RECURSIVE r({pks}) MAX RECURSION LEVEL 200 AS ("
+        f"SELECT {pks} FROM {{k}} WHERE {roots} UNION ALL "
+        f"SELECT {', '.join(f't.p{i}' for i in range(n))} "
+        f"FROM {{k}} t JOIN r ON {step}) "
+        f"SELECT {pks} FROM r LIMIT ALL"
+    )
 
 
 def self_ref_closure(
     base: DataFrame,
     fk: LogicalFK,
-    max_iter: int = 200,
     driver_threshold: int = 50_000,
 ) -> DataFrame:
     """Transitive closure of rows reachable from NULL-FK roots through the
     self-ref chain, restricted to ``base`` (the filtered set) — the
-    DataFrame equivalent of the reference's recursive CTE
-    (``src/FilterPropagation.scala:44-49``). Returns distinct PK tuples.
+    reference's recursive CTE (``src/FilterPropagation.scala:44-49``).
+    Returns distinct PK tuples.
 
     Small filtered sets (<= ``driver_threshold`` key rows) compute the
-    closure driver-side in one collect — the same philosophy as broadcast
-    joins: a depth-D fixpoint costs ~3D Spark jobs, a BFS over collected
-    keys costs two. Large sets use the distributed fixpoint. Both paths
-    read ``base`` once per probe or step: ``apply_subsetting`` passes a
-    pinned key frame, so none of those reads reaches the source.
+    closure driver-side from one bounded collect — the same philosophy
+    as broadcast joins. Larger sets run the CTE in Spark, which reads
+    ``base`` once per tree level: ``apply_subsetting`` passes a pinned key
+    frame, so none of those reads reaches the source.
     """
-    key_frame = base.select(*fk.pk_columns, *fk.fk_columns)
+    n = len(fk.pk_columns)
+    keys = base.select(
+        *[F.col(_quoted(c)).alias(f"p{i}") for i, c in enumerate(fk.pk_columns)],
+        *[F.col(_quoted(c)).alias(f"f{i}") for i, c in enumerate(fk.fk_columns)],
+    )
     # Bounded probe: one job, at most threshold+1 rows on the driver. A
-    # full result means the set exceeds the threshold -> distributed path.
-    probe = key_frame.limit(driver_threshold + 1).collect()
+    # full result means the set exceeds the threshold -> the CTE.
+    probe = keys.limit(driver_threshold + 1).collect()
     if len(probe) <= driver_threshold:
-        return _closure_on_driver(base, fk, probe)
-    pk_cols = fk.pk_columns
-    reachable = base.where(_all_null(base, fk.fk_columns)).select(*pk_cols)
-    reachable = reachable.localCheckpoint(eager=True)
-    frontier = reachable
-    for _ in range(max_iter):
-        keys = frontier.select(
-            *[F.col(pk).alias(f"__r_{i}") for i, pk in enumerate(pk_cols)]
-        )
-        cond = None
-        for i, fkc in enumerate(fk.fk_columns):
-            eq = base[fkc] == keys[f"__r_{i}"]
-            cond = eq if cond is None else cond & eq
-        children = base.join(keys, cond, "left_semi").select(*pk_cols)
-        new = children.subtract(reachable).localCheckpoint(eager=True)
-        if new.isEmpty():
-            return reachable
-        reachable = reachable.union(new).localCheckpoint(eager=True)
-        frontier = new
-    raise RuntimeError(f"self-ref closure did not converge in {max_iter} iterations")
+        reachable = _closure_on_driver(keys, n, probe)
+    else:
+        reachable = base.sparkSession.sql(_closure_sql(n), k=keys).distinct()
+        reachable = reachable.localCheckpoint(eager=True)
+    return reachable.toDF(*fk.pk_columns)
 
 
-def _closure_on_driver(base: DataFrame, fk: LogicalFK, rows: list) -> DataFrame:
-    """BFS over collected (pk, fk) key tuples; result re-distributed as a
-    DataFrame with the original PK schema."""
-    n_pk = len(fk.pk_columns)
+def _closure_on_driver(keys: DataFrame, n: int, rows: list) -> DataFrame:
+    """BFS over collected (p…, f…) key tuples; result re-distributed as a
+    DataFrame of the ``p…`` columns."""
     children: dict[tuple, list[tuple]] = {}
     roots: list[tuple] = []
     for r in rows:
-        pk = tuple(r[i] for i in range(n_pk))
-        parent = tuple(r[n_pk + i] for i in range(len(fk.fk_columns)))
+        pk, parent = tuple(r[:n]), tuple(r[n:])
         if all(v is None for v in parent):
             roots.append(pk)
         else:
             children.setdefault(parent, []).append(pk)
-    reachable: set[tuple] = set()
-    frontier = [pk for pk in roots]
-    reachable.update(frontier)
+    reachable: set[tuple] = set(roots)
+    frontier = roots
     while frontier:
         nxt = []
         for pk in frontier:
@@ -241,27 +266,10 @@ def _closure_on_driver(base: DataFrame, fk: LogicalFK, rows: list) -> DataFrame:
                     reachable.add(child)
                     nxt.append(child)
         frontier = nxt
-    schema = base.select(*fk.pk_columns).schema
-    return base.sparkSession.createDataFrame(
-        [tuple(pk) for pk in sorted(reachable, key=lambda t: tuple(map(str, t)))],
-        schema,
+    return keys.sparkSession.createDataFrame(
+        sorted(reachable, key=lambda t: tuple(map(str, t))),
+        keys.select(*[f"p{i}" for i in range(n)]).schema,
     )
-
-
-def _keep_reachable(base: DataFrame, fk: LogicalFK, closure: DataFrame, tag: int) -> DataFrame:
-    """``fk IS NULL OR (fk) IN closure`` via a left join against the closure
-    PK set (unique tuples, so no row multiplication)."""
-    marker_cols = [f"__c{tag}_{i}" for i in range(len(fk.pk_columns))]
-    keys = closure.select(
-        *[F.col(pk).alias(m) for pk, m in zip(fk.pk_columns, marker_cols)]
-    )
-    cond = None
-    for fkc, m in zip(fk.fk_columns, marker_cols):
-        eq = base[fkc] == keys[m]
-        cond = eq if cond is None else cond & eq
-    joined = base.join(keys, cond, "left")
-    keep = _all_null(joined, fk.fk_columns) | F.col(marker_cols[0]).isNotNull()
-    return joined.where(keep).drop(*marker_cols)
 
 
 def _key_set(frame: DataFrame, cols: list[str], pk: frozenset[str]) -> DataFrame:
@@ -313,7 +321,7 @@ def apply_subsetting(
             if fk.is_self_ref:
                 self_fks.append(fk)
             elif fk.pk_table in key_sets:
-                eff = _semi_join(eff, key_sets[fk.pk_table], fk)
+                eff = _fk_join(eff, key_sets[fk.pk_table], fk, "left_semi")
                 filtered = True
         child_cols = referenced.get(table)
         if not filtered or not (self_fks or child_cols):
@@ -326,10 +334,10 @@ def apply_subsetting(
             ))
             frame = eff.select(*frame_cols).localCheckpoint(eager=True)
             kept = frame
-            for tag, fk in enumerate(self_fks):
+            for fk in self_fks:
                 closure = self_ref_closure(frame, fk)
-                eff = _keep_reachable(eff, fk, closure, tag)
-                kept = _keep_reachable(kept, fk, closure, tag)
+                eff = keep_if_parent_in(eff, closure, fk)
+                kept = keep_if_parent_in(kept, closure, fk)
         if not child_cols:
             return eff, None
         pk = catalog.primary_keys.get(table, frozenset())

@@ -18,9 +18,9 @@ Sink (``src/CopyAction.scala:92-235``, ``src/OnConflict.scala``):
   * ``upsert_writer`` is the one partition loop: batched
     ``INSERT ... [ON CONFLICT]`` in one transaction per partition;
     retried tasks are idempotent under DO NOTHING/DO UPDATE.
-    ``write_jdbc`` runs it under ``foreachPartition``; the DataSource
-    writer (``df.write.format("pgwire"|"fakepg")``) calls it for every
-    write that cannot take the COPY path;
+    ``write_jdbc`` maps it over the partitions and sums the rows they
+    wrote; the DataSource writer (``df.write.format("pgwire"|"fakepg")``)
+    calls it for every write that cannot take the COPY path;
   * sequence reset (``src/TableCopier.scala:20-35``) and self-ref FK
     constraint deferral (``src/ConstraintDeferrer.scala:23-88``) are
     driver-side brackets around the write job. Deferral matters MORE
@@ -42,7 +42,7 @@ from typing import Any, Callable, Iterator
 from pyspark.sql import DataFrame
 
 from ..plans.on_conflict import OnConflict
-from ..plans.table_spec import TableSpec
+from ..plans.table_spec import DEFAULT_BATCH_SIZE
 from .catalog import Catalog, quote_identifier, quote_qualified
 
 logger = logging.getLogger(__name__)
@@ -247,12 +247,12 @@ def upsert_writer(
     schema: str = "public",
     on_conflict: OnConflict | None = None,
     primary_key: list[str] | None = None,
-    batch_size: int = TableSpec().batch_size,
+    batch_size: int = DEFAULT_BATCH_SIZE,
 ) -> Callable[[Iterator], int]:
     """Partition function executing batched INSERT [ON CONFLICT]: one
     transaction per partition, ``executemany`` every ``batch_size`` rows
-    (``src/CopyAction.scala:167-235``); returns the rows written. Use with
-    ``df.foreachPartition``. ``connect`` must be picklable (e.g. a
+    (``src/CopyAction.scala:167-235``); returns the rows written. Map it
+    over ``df.rdd`` partitions. ``connect`` must be picklable (e.g. a
     module-level factory closing over a DSN string), since it runs
     executor-side."""
     insert_sql = render_insert(table, columns, schema, on_conflict, primary_key)
@@ -290,11 +290,12 @@ def write_jdbc(
     schema: str = "public",
     on_conflict: OnConflict | None = None,
     primary_key: list[str] | None = None,
-    batch_size: int = TableSpec().batch_size,
+    batch_size: int = DEFAULT_BATCH_SIZE,
     catalog: Catalog | None = None,
-) -> None:
+) -> int:
     """Write with upsert support, bracketed by self-ref constraint deferral
-    and followed by sequence resets when a catalog is supplied.
+    and followed by sequence resets when a catalog is supplied. Returns the
+    rows written, summed from the partitions of the one write job.
 
     Self-referencing tables are coalesced to ONE partition: constraint
     deferral is per-transaction, and every Spark partition commits its own
@@ -322,10 +323,10 @@ def write_jdbc(
             cur.execute(render_defer_constraint(table, constraint, schema))
         conn.commit()
         try:
-            df.foreachPartition(
-                upsert_writer(connect, table, columns, schema, on_conflict,
-                              primary_key, batch_size)
-            )
+            write_partition = upsert_writer(connect, table, columns, schema,
+                                            on_conflict, primary_key, batch_size)
+            written = df.rdd.mapPartitions(
+                lambda rows: [write_partition(rows)]).sum()
             if catalog is not None:
                 for seq in catalog.sequences_of(table):
                     cur.execute(render_setval(seq.sequence_name,
@@ -349,3 +350,4 @@ def write_jdbc(
             conn.commit()
     finally:
         conn.close()
+    return written

@@ -53,6 +53,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from ..plans.table_spec import DEFAULT_BATCH_SIZE
 from .catalog import quote_identifier, quote_qualified
 from .jdbc import COLUMNS_SQL, render_select, upsert_writer
 
@@ -193,7 +194,8 @@ class FakePGDataSource(DataSource):
 
         Write options: ``table`` (required), ``dbschema``,
         ``on_conflict`` (``update`` | ``nothing``), ``primary_key``
-        (comma-separated, required for ``update``), ``batch_size``."""
+        (comma-separated, required for ``update``), ``batch_size`` (default
+        ``table_spec.DEFAULT_BATCH_SIZE``, the reference's 5000)."""
         if overwrite:
             conn = _connect_from_options(self.options)()
             try:
@@ -269,7 +271,7 @@ class DbApiWriter(DataSourceWriter):
         cols = [f.name for f in self.spark_schema.fields]
         table = options["table"]
         dbschema = options.get("dbschema", "public")
-        batch_size = int(options.get("batch_size", "1000"))
+        batch_size = int(options.get("batch_size", DEFAULT_BATCH_SIZE))
         oc = None
         pk: list[str] = []
         oc_mode = options.get("on_conflict")

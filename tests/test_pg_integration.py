@@ -205,16 +205,14 @@ def make_copier(spark, source_db, target_db, specs, skipped=frozenset()):
     read = table_reader(spark, source_db, snapshot_id=coordinator.snapshot_id)
 
     def write_table(table, df):
-        n = df.count()
         spec = specs.get(table, TableSpec())
-        write_jdbc(
+        return write_jdbc(
             df, tgt_connect, table,
             on_conflict=spec.on_conflict,
             primary_key=sorted(catalog.primary_keys.get(table, ())),
             batch_size=spec.batch_size,
             catalog=catalog,
         )
-        return n
 
     copier = DbCopier(catalog, read, write_table,
                       skipped_tables=set(skipped))
@@ -582,12 +580,10 @@ def single_table_env(spark, source_db, target_db):
 
     def write_for(spec):
         def write_table(table, df):
-            n = df.count()
-            write_jdbc(df, tgt_connect, table,
-                       on_conflict=spec.on_conflict,
-                       primary_key=sorted(catalog.primary_keys.get(table, ())),
-                       batch_size=spec.batch_size, catalog=catalog)
-            return n
+            return write_jdbc(df, tgt_connect, table,
+                              on_conflict=spec.on_conflict,
+                              primary_key=sorted(catalog.primary_keys.get(table, ())),
+                              batch_size=spec.batch_size, catalog=catalog)
         return write_table
 
     return read, write_for, tgt_connect, catalog
@@ -653,9 +649,7 @@ def hostile_identifier_body(spark, src, tgt_db):
     read = table_reader(spark, src)
 
     def write_table(t, df):
-        n = df.count()
-        write_jdbc(df, tgt_connect, t, primary_key=["id"])
-        return n
+        return write_jdbc(df, tgt_connect, t, primary_key=["id"])
 
     from simple_anonymizer_spark.plans.output_column import SourceColumn
     spec = TableSpec(columns=(SourceColumn("id"), SourceColumn(column)))
@@ -682,8 +676,9 @@ def test_hostile_identifier_quoting(spark, tmp_path):
 
 
 def test_snapshot_pinned_partitioned_reads(spark, source_db):
-    """src/DbCopier.scala:130-145: partitioned parallel reads all see the
-    exported snapshot, not concurrent commits."""
+    """src/DbCopier.scala:130-145: partitioned parallel reads, each opening
+    its own connection inside the executor task, all see the exported
+    snapshot, not concurrent commits; a fresh read sees the late row."""
     src_connect = source_db.connect_factory()
     coord = SnapshotCoordinator.export(src_connect)
     try:
@@ -703,8 +698,9 @@ def test_snapshot_pinned_partitioned_reads(spark, source_db):
         assert df.count() == 10
         assert df.filter("id = 999").count() == 0
 
-        fresh = table_reader(spark, source_db)
-        assert fresh("users").count() == 11
+        fresh = table_reader(spark, source_db)("users")
+        assert fresh.count() == 11
+        assert {r.first_name for r in fresh.where("id = 999").collect()} == {"Late"}
     finally:
         coord.close()
 

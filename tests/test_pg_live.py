@@ -348,52 +348,6 @@ def test_snapshot_covers_every_read_of_a_copy(spark, source_db, target_db):
     T.test_snapshot_covers_every_read_of_a_copy(spark, source_db, target_db)
 
 
-def test_pyds_executor_side_scan_real_server(spark, source_db):
-    """spark.read.format(\"pgwire\"): range-partitioned scan where every
-    partition opens its own wire connection INSIDE the executor task and
-    pins the exported snapshot — a concurrent committed writer stays
-    invisible to all partitions, on a real server."""
-    from simple_anonymizer_spark.sources.jdbc import SnapshotCoordinator
-    from simple_anonymizer_spark.sources.pyds import PGWireDataSource
-
-    spark.dataSource.register(PGWireDataSource)
-    coord = SnapshotCoordinator.export(source_db.connect_factory())
-    try:
-        conn = source_db.connect()
-        cur = conn.cursor()
-        cur.execute(
-            'INSERT INTO "public"."users" ("id", "first_name", "last_name", '
-            '"email") VALUES (%s, %s, %s, %s)',
-            (999, "Late", "Writer", "late@x.y"),
-        )
-        conn.commit()
-        conn.close()
-
-        reader = (
-            spark.read.format("pgwire")
-            .options(**source_db.datasource_options())
-            .option("table", "users")
-            .option("partition_column", "id")
-            .option("lower", "1").option("upper", "10")
-            .option("num_partitions", "3")
-            .option("snapshot_id", coord.snapshot_id)
-        )
-        df = reader.load()
-        assert df.rdd.getNumPartitions() == 3
-        assert df.count() == 10  # id=999 invisible to the pinned scan
-        assert df.filter("id = 999").count() == 0
-
-        fresh = (
-            spark.read.format("pgwire")
-            .options(**source_db.datasource_options())
-            .option("table", "users")
-        ).load()
-        assert fresh.count() == 11
-        assert {r.first_name for r in fresh.where("id = 999").collect()} == {"Late"}
-    finally:
-        coord.close()
-
-
 # ---------------------------------------------------------------------------
 # COPY FROM STDIN bulk load
 # ---------------------------------------------------------------------------

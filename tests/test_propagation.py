@@ -194,7 +194,7 @@ def test_null_fk_dropped_under_cross_table_filter(spark, fixture_catalog):
 def test_self_ref_closure_depth(spark, threshold):
     """Chain 1<-2<-3<-4 with filter excluding 3: closure = {1,2}; row 4
     (parent 3 not reachable) must drop even though 4 passes the filter.
-    threshold=0 forces the distributed fixpoint; 50k the driver BFS."""
+    threshold=0 forces the recursive CTE; 50k the driver BFS."""
     df = spark.createDataFrame(
         [(1, None), (2, 1), (3, 2), (4, 3)], "id int, parent_id int"
     )
@@ -211,6 +211,39 @@ def test_self_ref_closure_empty_roots(spark):
     base = df.where("id != 1")
     for threshold in (0, 50_000):
         assert self_ref_closure(base, f, driver_threshold=threshold).count() == 0
+
+
+def test_cte_closure_deep_chain_hostile_names(spark):
+    """The CTE path past Spark's default recursion level limit (100), with
+    PK/FK names that would break SQL text: a 160-node chain cut at node
+    151 closes over exactly nodes 1..150."""
+    df = spark.createDataFrame(
+        [(1, None)] + [(i, i - 1) for i in range(2, 161)],
+        "`node id` int, `up``link {x}` int",
+    )
+    f = fk("t", "up`link {x}", "t", "node id")
+    base = df.where("`node id` != 151").localCheckpoint(eager=True)
+    closure = self_ref_closure(base, f, driver_threshold=0)
+    assert closure.columns == ["node id"]
+    assert sorted(r[0] for r in closure.collect()) == list(range(1, 151))
+
+
+def test_cte_closure_ignores_session_row_limit(spark):
+    """A closure larger than ``spark.sql.cteRecursionRowLimit`` stays
+    complete: the CTE ends in ``LIMIT ALL``."""
+    key = "spark.sql.cteRecursionRowLimit"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10")
+    try:
+        df = spark.createDataFrame(
+            [(1, None)] + [(i, i // 2) for i in range(2, 101)],
+            "id int, parent_id int",
+        ).localCheckpoint(eager=True)
+        f = fk("t", "parent_id", "t", "id")
+        closure = self_ref_closure(df, f, driver_threshold=0)
+        assert sorted(r.id for r in closure.collect()) == list(range(1, 101))
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_composite_self_ref_closure(spark):
