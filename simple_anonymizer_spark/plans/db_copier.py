@@ -11,11 +11,12 @@ Spec enrichment (``src/DbCopier.scala:85-99``): PK and FK columns are
 auto-appended as passthrough ``SourceColumn``s, deduplicated by name with
 the user's spec winning; propagated subset filters are applied via
 ``plans.propagation.apply_subsetting`` rather than re-rendered SQL. It
-pins each filtered parent's FK key set once (level by level, tables of a
-level in parallel) and each write semi-joins those key sets, so a copy
-scans every source table at most twice — once for its key set, if other
-tables depend on it, and once for its write — instead of re-reading the
-whole ancestor chain for every descendant.
+pins each filtered parent's subset rows once (level by level, tables of
+a level in parallel); the parent's key set and its write both read that
+pin, and each child's write semi-joins its parents' key sets, so a copy
+scans every source table exactly once, as the reference's one streamed
+``SELECT … WHERE`` per table does, instead of re-reading the whole
+ancestor chain for every descendant.
 """
 
 from __future__ import annotations

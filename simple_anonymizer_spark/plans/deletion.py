@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.catalog import Catalog
-from .propagation import keep_if_parent_in, self_ref_closure
+from .propagation import _quoted, keep_if_parent_in, self_ref_closure
 from .table_sorter import sort_tables
 
 def cascade_delete(
@@ -60,7 +60,8 @@ def cascade_delete(
             if fk.is_self_ref:
                 continue
             if touched.get(fk.pk_table):
-                parent_keys = out[fk.pk_table].select(*fk.pk_columns).distinct()
+                parent_keys = out[fk.pk_table].select(
+                    *map(_quoted, fk.pk_columns)).distinct()
                 eff = keep_if_parent_in(eff, parent_keys, fk)
                 hit = True
         if hit:

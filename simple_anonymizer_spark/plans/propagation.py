@@ -19,25 +19,23 @@ Mirrors ``src/FilterPropagation.scala`` in two forms:
 
 Scale notes:
 
-* Key sets. A filtered table with cross-table children is read once into
-  the distinct projection of the columns its children reference, pinned
-  with an eager ``localCheckpoint``; it is key-sized, not row-sized.
-  Children semi-join the key set, never the parent's lazy plan, so no
-  descendant re-reads an ancestor. A filtered self-ref table pins one key
-  frame (self-ref PK/FK columns + child-referenced keys); the closures run
-  over that frame and the children's key set is derived from it after the
-  closures, with no further source read.
-* Scan bound. Each returned frame scans only its own source table (plus
-  checkpoints), so a whole copy scans each source table at most twice:
-  once for its key set, if it has one, and once for its write.
+* Pins. A filtered table with cross-table children or a self-ref FK pins
+  its subset rows (all columns) with one eager ``localCheckpoint``. The
+  pin is row-sized, so it is ``DISK_ONLY`` and leaves the heap flat. The
+  closures run over the pin; the children's key set (the distinct
+  projection of the columns they reference: key-sized, in memory) and
+  the table's write both read the post-closure pin. Children semi-join
+  the key set, never the parent's lazy plan.
+* Scan bound. A whole copy scans each source table exactly once: into
+  its pin, or by its write when it has none.
 * Tables of one topological level build their key sets concurrently.
 * Semi-joins let Catalyst pick broadcast when the key set is small (the
   common case for subsetting — that's the whole point of subsetting); AQE
   converts to broadcast at runtime otherwise.
 * Self-ref closure. A filtered set of at most 50k key rows closes on the
   driver: one bounded probe collects its (pk, fk) tuples and a BFS walks
-  them. A larger set runs one recursive CTE over the pinned key frame:
-  Spark joins the frame once per tree level (at most 200 levels), and the
+  them. A larger set runs one recursive CTE over the table's pin: Spark
+  joins its key columns once per tree level (at most 200 levels), and the
   distinct result is pinned by the job that computes it. There is no
   Python loop and no per-level checkpoint; on small frames the BFS still
   wins, since each CTE level costs a Spark job.
@@ -49,6 +47,7 @@ import operator
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -226,8 +225,8 @@ def self_ref_closure(
     Small filtered sets (<= ``driver_threshold`` key rows) compute the
     closure driver-side from one bounded collect — the same philosophy
     as broadcast joins. Larger sets run the CTE in Spark, which reads
-    ``base`` once per tree level: ``apply_subsetting`` passes a pinned key
-    frame, so none of those reads reaches the source.
+    ``base`` once per tree level: ``apply_subsetting`` passes its pinned
+    subset rows, so none of those reads reaches the source.
     """
     n = len(fk.pk_columns)
     keys = base.select(
@@ -275,7 +274,7 @@ def _closure_on_driver(keys: DataFrame, n: int, rows: list) -> DataFrame:
 def _key_set(frame: DataFrame, cols: list[str], pk: frozenset[str]) -> DataFrame:
     """Distinct ``cols`` projection, pinned. A projection that covers the
     primary key is distinct already and skips the aggregation."""
-    keys = frame.select(*cols)
+    keys = frame.select(*map(_quoted, cols))
     if not pk or not pk <= set(cols):
         keys = keys.distinct()
     return keys.localCheckpoint(eager=True)
@@ -294,10 +293,10 @@ def apply_subsetting(
     ``explicit_where`` values are raw Spark SQL fragments (matching the
     reference's opaque-string WHERE contract).
 
-    Key sets and self-ref closures are computed eagerly here, up to
+    Pins, key sets and self-ref closures are computed eagerly here, up to
     ``max_parallel_tables`` tables of a level at a time (see the module's
-    scale notes); the returned frames are lazy and each scans only its own
-    source table plus checkpoints.
+    scale notes); a returned frame reads its table's pin, or else scans
+    its own source table once, lazily.
     """
     fks = [fk for fk in catalog.foreign_keys if fk.fk_table in dfs and fk.pk_table in dfs]
     referenced: dict[str, list[str]] = {}
@@ -326,22 +325,16 @@ def apply_subsetting(
         child_cols = referenced.get(table)
         if not filtered or not (self_fks or child_cols):
             return eff, None
-        kept = eff
-        if self_fks:
-            frame_cols = list(dict.fromkeys(
-                [c for fk in self_fks for c in fk.pk_columns + fk.fk_columns]
-                + (child_cols or [])
-            ))
-            frame = eff.select(*frame_cols).localCheckpoint(eager=True)
-            kept = frame
-            for fk in self_fks:
-                closure = self_ref_closure(frame, fk)
-                eff = keep_if_parent_in(eff, closure, fk)
-                kept = keep_if_parent_in(kept, closure, fk)
+        # One source read: the closures, the children's key set and this
+        # table's write all read the pinned subset rows.
+        pinned = eff.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        eff = pinned
+        for fk in self_fks:
+            eff = keep_if_parent_in(eff, self_ref_closure(pinned, fk), fk)
         if not child_cols:
             return eff, None
         pk = catalog.primary_keys.get(table, frozenset())
-        return eff, _key_set(kept, child_cols, pk)
+        return eff, _key_set(eff, child_cols, pk)
 
     levels = sort_tables(list(dfs), fks)
     with ThreadPoolExecutor(max_workers=max_parallel_tables) as pool:

@@ -19,7 +19,8 @@ benchmark). Scope (deliberately small):
 
 * startup + trust or cleartext-password auth;
 * simple Query ('Q') messages only — multi-statement strings work, which
-  is exactly what ``session_init_sql`` needs;
+  is exactly what ``session_init_sql`` needs, and ``executemany``
+  pipelines a batch as one ``;``-joined Query (one round trip per batch);
 * client-side ``%s`` parameter interpolation with standard literal
   quoting ('' doubling; standard_conforming_strings assumed ON, the
   server default since PG 9.1);
@@ -257,16 +258,17 @@ class Connection:
                 fields[part[:1]] = part[1:].decode("utf-8", "replace")
         return _error_for(fields.get(b"C"), fields.get(b"M", "server error"))
 
-    def _simple_query(self, sql: str) -> tuple[list, list[tuple], int]:
-        """Send one Query message; drain to ReadyForQuery. Returns
-        (description, rows, rowcount) of the LAST result set."""
+    def _simple_query(self, sql: str) -> tuple[list, list[tuple], list[int]]:
+        """Send one Query message; drain to ReadyForQuery. Returns the
+        (description, rows) of the LAST result set and the rowcount of
+        every statement, in order (-1 where the command reports none)."""
         if self.closed:
             raise ProgrammingError("connection is closed")
         self._send(b"Q", sql.encode("utf-8") + b"\0")
         description: list = []
         rows: list[tuple] = []
         oids: list[int] = []
-        rowcount = -1
+        rowcounts: list[int] = []
         error: Error | None = None
         while True:
             tag, payload = self._recv()
@@ -277,14 +279,14 @@ class Connection:
                 rows.append(self._parse_data_row(payload, oids))
             elif tag == b"C":  # CommandComplete
                 tail = payload.rstrip(b"\0").split()
-                rowcount = int(tail[-1]) if tail and tail[-1].isdigit() else -1
+                rowcounts.append(int(tail[-1]) if tail and tail[-1].isdigit() else -1)
             elif tag == b"E":
                 error = self._parse_error(payload)
             elif tag == b"Z":
                 self._status = payload[:1]
                 if error is not None:
                     raise error
-                return description, rows, rowcount
+                return description, rows, rowcounts
             # I (EmptyQueryResponse), N (Notice), S (ParameterStatus): skip
 
     @staticmethod
@@ -317,7 +319,7 @@ class Connection:
             values.append(_decode(raw, oids[i] if i < len(oids) else 25))
         return tuple(values)
 
-    def _execute(self, sql: str, params=None) -> tuple[list, list[tuple], int]:
+    def _execute(self, sql: str, params=None) -> tuple[list, list[tuple], list[int]]:
         text = _interpolate(sql, params)
         if (not self.autocommit and self._status == b"I"
                 and not _BEGINS_TXN.match(text)):
@@ -417,19 +419,31 @@ class Cursor:
         self._rows: list[tuple] = []
         self._idx = 0
 
-    def execute(self, sql: str, params=None) -> None:
-        description, rows, rowcount = self.conn._execute(sql, params)
+    def _run(self, sql: str, params=None) -> list[int]:
+        description, rows, rowcounts = self.conn._execute(sql, params)
         self.description = description or None
         self._rows = rows
         self._idx = 0
-        self.rowcount = rowcount
+        return rowcounts
+
+    def execute(self, sql: str, params=None) -> None:
+        rowcounts = self._run(sql, params)
+        self.rowcount = rowcounts[-1] if rowcounts else -1
 
     def executemany(self, sql: str, seq_of_params) -> None:
-        total = 0
-        for params in seq_of_params:
-            self.execute(sql, params)
-            total += max(self.rowcount, 0)
-        self.rowcount = total
+        """Run ``sql`` once per parameter tuple in one round trip: the
+        interpolated statements go out ``;``-joined in one Query message,
+        as pgjdbc's ``executeBatch`` pipelines them. Each statement keeps
+        its own semantics (an ``INSERT … ON CONFLICT`` row sees the rows
+        before it); ``rowcount`` is the sum of their counts. The server
+        runs a multi-statement Query as one transaction, so in autocommit
+        mode the batch is one implicit transaction: a failing statement
+        undoes the whole batch."""
+        text = ";\n".join(_interpolate(sql, params) for params in seq_of_params)
+        if not text:
+            self.rowcount = 0
+            return
+        self.rowcount = sum(max(n, 0) for n in self._run(text))
 
     def fetchone(self):
         if self._idx >= len(self._rows):

@@ -1,16 +1,17 @@
 """Source-scan bound of the whole-database copy.
 
-``DbCopier.run`` must read each source table at most twice — once into
-its pinned FK key set, when other rows depend on it, and once for its
-write — and every other table exactly once; no descendant may re-read an
-ancestor, no self-ref closure step may re-read its table, and the Parquet
-sink must not read its output back. Scans are counted from Spark's SQL
-status store (populated with the UI disabled) and attributed to a table
-by the ``<table>.parquet`` file name in the scan's ``Location``. Spark
-truncates that string at ``spark.sql.maxMetadataStringLength`` (100)
-characters, so inputs live under short directories, and every Parquet
-scan must be attributed (an unattributed one fails the test rather than
-going uncounted).
+``DbCopier.run`` must read each source table exactly once: a filtered
+table that other rows depend on (children or a self-ref FK) is read into
+one pin of its subset rows, from which its key set, its closures and its
+write all derive, and every other table is read by its write. No
+descendant may re-read an ancestor, no self-ref closure step may re-read
+its table, and the Parquet sink must not read its output back. Scans are
+counted from Spark's SQL status store (populated with the UI disabled)
+and attributed to a table by the ``<table>.parquet`` file name in the
+scan's ``Location``. Spark truncates that string at
+``spark.sql.maxMetadataStringLength`` (100) characters, so inputs live
+under short directories, and every Parquet scan must be attributed (an
+unattributed one fails the test rather than going uncounted).
 """
 
 from __future__ import annotations
@@ -72,17 +73,6 @@ def passthrough_specs(catalog: Catalog, where: dict[str, str]) -> dict[str, Tabl
     return specs
 
 
-def assert_scan_bound(counts: dict[str, int], tables, keyed: set[str]) -> None:
-    """Key-set tables: 1-2 scans; every other table: exactly one."""
-    for t in tables:
-        n = counts.get(t, 0)
-        if t in keyed:
-            assert 1 <= n <= 2, f"{t}: {n} scans (key set + write allow 2)"
-        else:
-            assert n == 1, f"{t}: {n} scans (expected exactly 1)"
-    assert set(counts) <= set(tables), counts
-
-
 def read_output(spark, out_dir: str, table: str, cols: list[str]) -> list[tuple]:
     return sorted(tuple(r) for r in spark.read.parquet(f"{out_dir}/{table}")
                   .select(*cols).collect())
@@ -95,7 +85,7 @@ def read_output(spark, out_dir: str, table: str, cols: list[str]) -> list[tuple]
 _REFERRER_SQL = "CASE WHEN c_custkey <= 8 THEN NULL ELSE c_custkey div 2 END"
 
 
-def test_tpch_chain_copy_scans_each_table_at_most_twice(spark, sf_dir, tmp_path):
+def test_tpch_chain_copy_scans_each_table_exactly_once(spark, sf_dir, tmp_path):
     tpch = _tpch_catalog()
     referrer = LogicalFK(None, "customer", "customer", (("c_referrer", "c_custkey"),))
     catalog = Catalog.declared(
@@ -117,8 +107,7 @@ def test_tpch_chain_copy_scans_each_table_at_most_twice(spark, sf_dir, tmp_path)
     counter = ScanCounter(spark)
     result = DbCopier(catalog, read, parquet_writer(spark, out_dir)).run(
         passthrough_specs(catalog, where))
-    assert_scan_bound(counter.per_table(), catalog.tables,
-                      keyed={"region", "nation", "customer", "orders"})
+    assert counter.per_table() == {t: 1 for t in catalog.tables}
 
     # Row sets equal the reference's rendered SQL (IN subqueries + WITH
     # RECURSIVE) executed by DuckDB over the same files.
@@ -214,9 +203,7 @@ def test_fixture_catalog_copy_scans_and_edge_cases(spark, fixture_dir, tmp_path)
     result = DbCopier(FIXTURE_CATALOG, parquet_reader(spark, fixture_dir),
                       parquet_writer(spark, out_dir)).run(
         passthrough_specs(FIXTURE_CATALOG, where))
-    assert_scan_bound(
-        counter.per_table(), FIXTURE_CATALOG.tables,
-        keyed={"users", "orders", "categories", "employees", "tree_nodes"})
+    assert counter.per_table() == {t: 1 for t in FIXTURE_CATALOG.tables}
 
     expected = {
         "users": [(1,), (2,)],

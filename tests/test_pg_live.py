@@ -197,9 +197,8 @@ class LivePG:
                f"VALUES ({', '.join(['%s'] * len(cols))})")
         conn = self.connect()
         try:
-            cur = conn.cursor()
-            for r in rows:
-                cur.execute(sql, tuple(r.get(c) for c in cols))
+            conn.cursor().executemany(
+                sql, [tuple(r.get(c) for c in cols) for r in rows])
             conn.commit()
         finally:
             conn.close()
@@ -346,6 +345,65 @@ def test_failed_write_restores_self_ref_deferral(spark, target_db):
 
 def test_snapshot_covers_every_read_of_a_copy(spark, source_db, target_db):
     T.test_snapshot_covers_every_read_of_a_copy(spark, source_db, target_db)
+
+
+# ---------------------------------------------------------------------------
+# Pipelined executemany
+# ---------------------------------------------------------------------------
+
+_INSERT_USER = ('INSERT INTO "public"."users" ("id", "first_name", "last_name", '
+                '"email") VALUES (%s, %s, %s, %s)')
+
+
+def _user(i: int, name: str = "F") -> tuple:
+    return (i, f"{name}{i}", f"L{i}", f"u{i}@example.com")
+
+
+def test_live_executemany_sums_rowcounts_per_statement(target_db):
+    """One batch is one Query message, but each row stays its own
+    statement: a DO NOTHING conflict counts 0, and a key repeated inside
+    one DO UPDATE batch inserts, then updates (a multi-row INSERT would
+    refuse to touch the row twice)."""
+    do_nothing = _INSERT_USER + ' ON CONFLICT ("id") DO NOTHING'
+    do_update = (_INSERT_USER + ' ON CONFLICT ("id") DO UPDATE SET '
+                 '"first_name" = EXCLUDED."first_name"')
+    conn = target_db.connect()
+    try:
+        cur = conn.cursor()
+        cur.executemany(do_nothing, [_user(i) for i in (1, 2, 3)])
+        assert cur.rowcount == 3
+        cur.executemany(do_nothing, [_user(i) for i in (3, 4, 5, 6)])
+        assert cur.rowcount == 3
+        cur.executemany(do_update, [_user(7), _user(7, "Again"), _user(1, "New")])
+        assert cur.rowcount == 3
+        cur.executemany(do_update, [])
+        assert cur.rowcount == 0
+        conn.commit()
+        cur.execute('SELECT "id", "first_name" FROM "public"."users" '
+                    'WHERE "id" IN (1, 7) ORDER BY "id"')
+        assert cur.fetchall() == [(1, "New1"), (7, "Again7")]
+        cur.execute('SELECT COUNT(*) FROM "public"."users"')
+        assert cur.fetchall() == [(7,)]
+    finally:
+        conn.close()
+
+
+@pytest.mark.parametrize("autocommit", [False, True])
+def test_live_executemany_duplicate_mid_batch_keeps_no_row(target_db, autocommit):
+    """A duplicate key in the middle of a batch raises IntegrityError and
+    no row of the batch survives: inside a transaction after rollback, in
+    autocommit mode because the batch is one implicit transaction."""
+    conn = target_db.connect()
+    conn.autocommit = autocommit
+    try:
+        cur = conn.cursor()
+        with pytest.raises(pgwire.IntegrityError):
+            cur.executemany(_INSERT_USER, [_user(i) for i in (10, 11, 10, 12)])
+        conn.rollback()
+        cur.execute('SELECT COUNT(*) FROM "public"."users"')
+        assert cur.fetchall() == [(0,)]
+    finally:
+        conn.close()
 
 
 # ---------------------------------------------------------------------------

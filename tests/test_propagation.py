@@ -228,6 +228,45 @@ def test_cte_closure_deep_chain_hostile_names(spark):
     assert sorted(r[0] for r in closure.collect()) == list(range(1, 151))
 
 
+def test_subsetting_hostile_key_names(spark):
+    """A filtered self-ref table whose PK/FK names hold a space and a
+    backtick, with one child: the closure, the children's key set and the
+    semi-join all take the names literally."""
+    nodes = spark.createDataFrame(
+        [(1, None), (2, 1), (3, 2), (4, None), (5, 4)],
+        "`node`` id` int, `up``link` int",
+    )
+    leaves = spark.createDataFrame(
+        [(10, 1), (11, 3), (12, 4), (13, 5)], "id int, `node`` id` int")
+    cat = Catalog.declared(
+        columns={"nodes": ["node` id", "up`link"], "leaves": ["id", "node` id"]},
+        primary_keys={"nodes": {"node` id"}, "leaves": {"id"}},
+        foreign_keys=[fk("nodes", "up`link", "nodes", "node` id"),
+                      fk("leaves", "node` id", "nodes", "node` id")],
+    )
+    out = apply_subsetting({"nodes": nodes, "leaves": leaves}, cat,
+                           {"nodes": "`node`` id` <> 2"})
+    assert sorted(r[0] for r in out["nodes"].collect()) == [1, 4, 5]
+    assert sorted(r.id for r in out["leaves"].collect()) == [10, 12, 13]
+
+
+def test_cascade_delete_hostile_key_names(spark):
+    """Cascade deletion selects the surviving parents' keys by their
+    literal names."""
+    from simple_anonymizer_spark.plans.deletion import cascade_delete
+
+    parent = spark.createDataFrame([(1,), (2,)], "`p``id` int")
+    child = spark.createDataFrame([(10, 1), (11, 2)], "cid int, `p``ref` int")
+    cat = Catalog.declared(
+        columns={"parent": ["p`id"], "child": ["cid", "p`ref"]},
+        primary_keys={"parent": {"p`id"}, "child": {"cid"}},
+        foreign_keys=[fk("child", "p`ref", "parent", "p`id")],
+    )
+    out = cascade_delete({"parent": parent, "child": child}, cat,
+                         {"parent": "`p``id` = 2"})
+    assert [r.cid for r in out["child"].collect()] == [10]
+
+
 def test_cte_closure_ignores_session_row_limit(spark):
     """A closure larger than ``spark.sql.cteRecursionRowLimit`` stays
     complete: the CTE ends in ``LIMIT ALL``."""
