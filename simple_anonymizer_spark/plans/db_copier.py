@@ -1,22 +1,33 @@
 """Whole-database copy orchestrator — mirrors ``src/DbCopier.scala``.
 
-Plan → enrich → validate → execute, all driver-side; execution submits one
-Spark write job per table, levels sequential and tables within a level in
-parallel (``src/DbCopier.scala:57-83`` — there it's eager Futures, here a
-thread pool submitting Spark actions; Spark's scheduler interleaves jobs).
-The same pool resolves the ``read_table`` calls up front, so per-table
-source schema lookups (a round trip each on a JDBC/pgwire source) overlap.
+Plan → enrich → validate → execute, all driver-side. Execution is one
+dependency graph of per-table steps (``plans.propagation.apply_subsetting``
+with ``write``) on a pool of ``max_parallel_tables`` threads submitting
+Spark actions; Spark's scheduler interleaves their jobs. A table's subset
+step runs once its cross-table FK parents' subset steps have returned; its
+write runs once its own subset step and its FK parents' writes have
+returned. So an unfiltered table is written at once, while a filtered
+table's pin or closure elsewhere is still running, and a constrained
+target still receives every parent before its children
+(``src/DbCopier.scala:57-83`` runs each table's ``SELECT … WHERE`` inside
+its own copy step, level by level). A pool resolves the ``read_table``
+calls up front, only for the tables that get copied, so per-table source
+schema lookups (a round trip each on a pgwire source) overlap.
 
 Spec enrichment (``src/DbCopier.scala:85-99``): PK and FK columns are
 auto-appended as passthrough ``SourceColumn``s, deduplicated by name with
-the user's spec winning; propagated subset filters are applied via
-``plans.propagation.apply_subsetting`` rather than re-rendered SQL. It
-pins each filtered parent's subset rows once (level by level, tables of
-a level in parallel); the parent's key set and its write both read that
-pin, and each child's write semi-joins its parents' key sets, so a copy
-scans every source table exactly once, as the reference's one streamed
-``SELECT … WHERE`` per table does, instead of re-reading the whole
-ancestor chain for every descendant.
+the user's spec winning; propagated subset filters are applied by
+semi-joins rather than re-rendered SQL. A filtered parent pins its subset
+rows once; its write and its children's semi-joins read that pin, so a
+copy scans every source table exactly once, as the reference's one
+streamed ``SELECT … WHERE`` per table does.
+
+Failure order: the first exception of any step (a pin, a closure or a
+write) stops new steps and is re-raised by ``run`` once the steps already
+running have finished. A failed table's descendants are never written,
+but tables that do not depend on it may already have been written: a
+subsetting error can surface after unrelated writes, as in the reference,
+where each table's query runs in its own copy step.
 """
 
 from __future__ import annotations
@@ -85,38 +96,35 @@ class DbCopier:
         # Validate: all tables spec'd or skipped; all columns covered.
         coverage.validate(catalog, self.skipped_tables, enriched)
 
-        # Topological plan over in-scope tables.
+        # Topological plan over in-scope tables: cyclic groups and their
+        # descendants are dropped, so they are neither read nor written.
         in_scope = [t for t in catalog.tables if t not in self.skipped_tables]
         fks = [
             fk for fk in catalog.foreign_keys
             if fk.fk_table in in_scope and fk.pk_table in in_scope
         ]
         levels = sort_tables(in_scope, fks)
+        copied = [t for level in levels for t in level]
 
-        logger.info("Copying %d tables in %d levels...",
-                    sum(map(len, levels)), len(levels))
+        logger.info("Copying %d tables in %d levels...", len(copied), len(levels))
         results: dict[str, int] = {t: 0 for t in self.skipped_tables if t in catalog.tables}
 
         with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as pool:
-            # Read + subset (explicit filters AND propagated semi-joins).
-            dfs = dict(zip(in_scope, pool.map(self.read_table, in_scope)))
-            explicit = {
-                t: spec.where_clause.render()
-                for t, spec in enriched.items()
-                if spec.where_clause is not None and t in dfs
-            }
-            subsetted = apply_subsetting(
-                dfs, catalog, explicit, max_parallel_tables=self.max_parallel_tables
-            )
+            dfs = dict(zip(copied, pool.map(self.read_table, copied)))
+        explicit = {
+            t: spec.where_clause.render()
+            for t, spec in enriched.items()
+            if spec.where_clause is not None and t in dfs
+        }
 
-            def copy_one(table: str) -> tuple[str, int]:
-                spec = enriched[table]
-                # WHERE already applied during subsetting — compile columns/limit only.
-                df = apply_spec(subsetted[table], replace(spec, where_clause=None))
-                return table, self.write_table(table, df)
+        def copy_one(table: str, subset: DataFrame) -> None:
+            spec = enriched[table]
+            # WHERE already applied during subsetting — compile columns/limit only.
+            df = apply_spec(subset, replace(spec, where_clause=None))
+            results[table] = count = self.write_table(table, df)
+            logger.info("Copied %s: %d rows", table, count)
 
-            for level in levels:
-                for table, count in pool.map(copy_one, level):
-                    results[table] = count
-                    logger.info("Copied %s: %d rows", table, count)
+        # Subset and write (explicit filters AND propagated semi-joins).
+        apply_subsetting(dfs, catalog, explicit,
+                         max_parallel_tables=self.max_parallel_tables, write=copy_one)
         return results

@@ -8,10 +8,10 @@ Mirrors ``src/FilterPropagation.scala`` in two forms:
   ``tests/test_propagation_equivalence.py`` runs in DuckDB against
   ``apply_subsetting`` on randomized schemas.
 * ``apply_subsetting`` — the Spark execution path over DataFrames:
-  cross-table propagation as **left-semi joins** against the filtered
-  parent's pinned *key set* (transitivity falls out of processing tables
-  in topological order), and self-referencing closure as the reference's
-  recursive CTE run by Spark's own ``WITH RECURSIVE``
+  cross-table propagation as **left-semi joins** against the frame the
+  filtered parent's subset returned (transitivity falls out of each
+  table waiting for its parents), and self-referencing closure as the
+  reference's recursive CTE run by Spark's own ``WITH RECURSIVE``
   (``self_ref_closure``). NULL-FK semantics match SQL ``IN`` (rows with
   NULL FK drop under a cross-table parent filter; NULL-FK roots are kept
   by self-ref closure via the explicit ``fk IS NULL OR reachable``
@@ -22,37 +22,43 @@ Scale notes:
 * Pins. A filtered table with cross-table children or a self-ref FK pins
   its subset rows (all columns) with one eager ``localCheckpoint``. The
   pin is row-sized, so it is ``DISK_ONLY`` and leaves the heap flat. The
-  closures run over the pin; the children's key set (the distinct
-  projection of the columns they reference: key-sized, in memory) and
-  the table's write both read the post-closure pin. Children semi-join
-  the key set, never the parent's lazy plan.
+  closures run over the pin, and the table returns the pin (joined with
+  its closures). Its write and its children's semi-joins read that
+  frame, never the parent's lazy plan; a left-semi join ignores
+  duplicate keys, so no separate key set is built.
 * Scan bound. A whole copy scans each source table exactly once: into
   its pin, or by its write when it has none.
-* Tables of one topological level build their key sets concurrently.
-* Semi-joins let Catalyst pick broadcast when the key set is small (the
-  common case for subsetting — that's the whole point of subsetting); AQE
-  converts to broadcast at runtime otherwise.
+* Schedule. Subsetting is one dependency graph (``run_graph``): a
+  table's subset step runs as soon as its cross-table FK parents' subset
+  steps have returned, up to ``max_parallel_tables`` at a time. With
+  ``write``, each table's write joins the same graph and starts once its
+  own subset step and its FK parents' writes have returned, so an
+  unfiltered table is written while a slow closure elsewhere still runs.
+* Semi-joins let Catalyst pick broadcast when the parent's subset is
+  small (the common case for subsetting — that's the whole point of
+  subsetting); AQE converts to broadcast at runtime otherwise.
 * Self-ref closure. A filtered set of at most 50k key rows closes on the
-  driver: one bounded probe collects its (pk, fk) tuples and a BFS walks
-  them. A larger set runs one recursive CTE over the table's pin: Spark
-  joins its key columns once per tree level (at most 200 levels), and the
-  distinct result is pinned by the job that computes it. There is no
-  Python loop and no per-level checkpoint; on small frames the BFS still
-  wins, since each CTE level costs a Spark job.
+  driver: one bounded probe fetches its (pk, fk) tuples as Arrow and a
+  BFS walks them. A larger set runs one recursive CTE over the table's
+  pin: Spark joins its key columns once per tree level (at most 200
+  levels), and the distinct result is pinned by the job that computes
+  it. There is no Python loop and no per-level checkpoint; on small
+  frames the BFS still wins, since each CTE level costs a Spark job.
 """
 
 from __future__ import annotations
 
 import operator
-from concurrent.futures import ThreadPoolExecutor
+from collections.abc import Callable
 from functools import reduce
 
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.catalog import Catalog, LogicalFK, quote_identifier
-from .table_sorter import sort_tables
+from .table_sorter import run_graph, sort_tables
 from .table_spec import WhereClause
 
 # ---------------------------------------------------------------------------
@@ -223,7 +229,7 @@ def self_ref_closure(
     Returns distinct PK tuples.
 
     Small filtered sets (<= ``driver_threshold`` key rows) compute the
-    closure driver-side from one bounded collect — the same philosophy
+    closure driver-side from one bounded Arrow fetch — the same philosophy
     as broadcast joins. Larger sets run the CTE in Spark, which reads
     ``base`` once per tree level: ``apply_subsetting`` passes its pinned
     subset rows, so none of those reads reaches the source.
@@ -233,10 +239,13 @@ def self_ref_closure(
         *[F.col(_quoted(c)).alias(f"p{i}") for i, c in enumerate(fk.pk_columns)],
         *[F.col(_quoted(c)).alias(f"f{i}") for i, c in enumerate(fk.fk_columns)],
     )
-    # Bounded probe: one job, at most threshold+1 rows on the driver. A
-    # full result means the set exceeds the threshold -> the CTE.
-    probe = keys.limit(driver_threshold + 1).collect()
-    if len(probe) <= driver_threshold:
+    # Bounded probe: one job, at most threshold+1 rows on the driver, as
+    # Arrow (no per-row Row objects). One partition keeps the limit a lazy
+    # take, where a limit over many partitions would shuffle them into one
+    # before Arrow collects it. A full result means the set exceeds the
+    # threshold -> the CTE.
+    probe = keys.coalesce(1).limit(driver_threshold + 1).toArrow()
+    if probe.num_rows <= driver_threshold:
         reachable = _closure_on_driver(keys, n, probe)
     else:
         reachable = base.sparkSession.sql(_closure_sql(n), k=keys).distinct()
@@ -244,13 +253,13 @@ def self_ref_closure(
     return reachable.toDF(*fk.pk_columns)
 
 
-def _closure_on_driver(keys: DataFrame, n: int, rows: list) -> DataFrame:
-    """BFS over collected (p…, f…) key tuples; result re-distributed as a
-    DataFrame of the ``p…`` columns."""
+def _closure_on_driver(keys: DataFrame, n: int, probe: pa.Table) -> DataFrame:
+    """BFS over the fetched (p…, f…) key tuples; result re-distributed as
+    a DataFrame of the ``p…`` columns."""
+    cols = [c.to_pylist() for c in probe.columns]
     children: dict[tuple, list[tuple]] = {}
     roots: list[tuple] = []
-    for r in rows:
-        pk, parent = tuple(r[:n]), tuple(r[n:])
+    for pk, parent in zip(zip(*cols[:n]), zip(*cols[n:])):
         if all(v is None for v in parent):
             roots.append(pk)
         else:
@@ -271,20 +280,12 @@ def _closure_on_driver(keys: DataFrame, n: int, rows: list) -> DataFrame:
     )
 
 
-def _key_set(frame: DataFrame, cols: list[str], pk: frozenset[str]) -> DataFrame:
-    """Distinct ``cols`` projection, pinned. A projection that covers the
-    primary key is distinct already and skips the aggregation."""
-    keys = frame.select(*map(_quoted, cols))
-    if not pk or not pk <= set(cols):
-        keys = keys.distinct()
-    return keys.localCheckpoint(eager=True)
-
-
 def apply_subsetting(
     dfs: dict[str, DataFrame],
     catalog: Catalog,
     explicit_where: dict[str, str],
     max_parallel_tables: int = 8,
+    write: Callable[[str, DataFrame], object] | None = None,
 ) -> dict[str, DataFrame]:
     """Return per-table DataFrames with explicit filters AND propagated
     FK subsetting applied — the Spark-native equivalent of the whole
@@ -293,56 +294,55 @@ def apply_subsetting(
     ``explicit_where`` values are raw Spark SQL fragments (matching the
     reference's opaque-string WHERE contract).
 
-    Pins, key sets and self-ref closures are computed eagerly here, up to
-    ``max_parallel_tables`` tables of a level at a time (see the module's
-    scale notes); a returned frame reads its table's pin, or else scans
-    its own source table once, lazily.
+    Pins and self-ref closures are computed eagerly here, up to
+    ``max_parallel_tables`` steps at a time (see the module's scale
+    notes); a returned frame reads its table's pin, or else scans its own
+    source table once, lazily. With ``write``, ``write(table, frame)`` is
+    called for every table the sorter keeps, in FK order, from the same
+    graph; the first exception stops it and is re-raised.
     """
     fks = [fk for fk in catalog.foreign_keys if fk.fk_table in dfs and fk.pk_table in dfs]
-    referenced: dict[str, list[str]] = {}
-    for fk in fks:
-        if not fk.is_self_ref:
-            cols = referenced.setdefault(fk.pk_table, [])
-            cols.extend(c for c in fk.pk_columns if c not in cols)
+    cross = [fk for fk in fks if not fk.is_self_ref]
+    parents = {fk.pk_table for fk in cross}
+    tables = [t for level in sort_tables(list(dfs), fks) for t in level]
 
     out: dict[str, DataFrame] = dict(dfs)
-    key_sets: dict[str, DataFrame] = {}
+    filtered: set[str] = set()
 
-    def subset_one(table: str) -> tuple[DataFrame, DataFrame | None]:
+    def subset_one(table: str) -> None:
         eff = dfs[table]
-        filtered = table in explicit_where
-        if filtered:
+        if table in explicit_where:
             eff = eff.where(F.expr(explicit_where[table]))
-        self_fks = []
-        for fk in fks:
-            if fk.fk_table != table:
-                continue
-            if fk.is_self_ref:
-                self_fks.append(fk)
-            elif fk.pk_table in key_sets:
-                eff = _fk_join(eff, key_sets[fk.pk_table], fk, "left_semi")
-                filtered = True
-        child_cols = referenced.get(table)
-        if not filtered or not (self_fks or child_cols):
-            return eff, None
-        # One source read: the closures, the children's key set and this
-        # table's write all read the pinned subset rows.
-        pinned = eff.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        eff = pinned
-        for fk in self_fks:
-            eff = keep_if_parent_in(eff, self_ref_closure(pinned, fk), fk)
-        if not child_cols:
-            return eff, None
-        pk = catalog.primary_keys.get(table, frozenset())
-        return eff, _key_set(eff, child_cols, pk)
+        for fk in cross:
+            if fk.fk_table == table and fk.pk_table in filtered:
+                eff = _fk_join(eff, out[fk.pk_table], fk, "left_semi")
+        if eff is dfs[table]:
+            return  # unfiltered: its write scans the source lazily
+        self_fks = [fk for fk in fks if fk.fk_table == table and fk.is_self_ref]
+        if self_fks or table in parents:
+            # One source read: the closures, this table's write and its
+            # children's semi-joins all read the pinned subset rows.
+            pinned = eff.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            eff = pinned
+            for fk in self_fks:
+                eff = keep_if_parent_in(eff, self_ref_closure(pinned, fk), fk)
+        out[table] = eff
+        filtered.add(table)
 
-    levels = sort_tables(list(dfs), fks)
-    with ThreadPoolExecutor(max_workers=max_parallel_tables) as pool:
-        for level in levels:
-            # Drain the level before publishing its key sets: its tables
-            # read ``key_sets`` concurrently.
-            for table, (eff, keys) in zip(level, list(pool.map(subset_one, level))):
-                out[table] = eff
-                if keys is not None:
-                    key_sets[table] = keys
+    def step(node: tuple[str, str]) -> None:
+        kind, table = node
+        if kind == "subset":
+            subset_one(table)
+        else:
+            write(table, out[table])
+
+    deps: dict[tuple[str, str], set[tuple[str, str]]] = {
+        ("subset", t): {("subset", fk.pk_table) for fk in cross if fk.fk_table == t}
+        for t in tables
+    }
+    if write is not None:
+        for t in tables:
+            deps[("write", t)] = {("subset", t)} | {
+                ("write", fk.pk_table) for fk in cross if fk.fk_table == t}
+    run_graph(deps, step, max_parallel_tables)
     return out

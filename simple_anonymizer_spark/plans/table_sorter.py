@@ -3,13 +3,22 @@
 Level 0 = tables with no (in-scope, non-self) FK parents; level N depends
 only on levels < N. Cyclic groups are dropped with a warning, not an error
 (``src/TableSorter.scala:57-63`` — a non-standard semantic we deliberately
-preserve). Within a level, tables sort by name. The leveling drives the
-copy schedule: levels sequential, tables within a level parallel.
+preserve). Within a level, tables sort by name.
+
+The copy does not run level by level: ``run_graph`` runs it as one
+dependency graph (``plans.propagation.apply_subsetting``), each step as
+soon as the steps it depends on have returned. The leveling only decides
+which tables take part (cyclic groups and their descendants do not) and
+the order of cascade deletion.
 """
 
 from __future__ import annotations
 
 import logging
+from collections import deque
+from collections.abc import Callable, Hashable, Iterable
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from graphlib import TopologicalSorter
 
 from ..sources.catalog import LogicalFK
 
@@ -69,3 +78,43 @@ def group_tables_by_level(table_levels: dict[str, int]) -> list[list[str]]:
 def sort_tables(tables: list[str], fks: list[LogicalFK]) -> list[list[str]]:
     """Tables grouped into copy levels (``src/TableSorter.scala:96-101``)."""
     return group_tables_by_level(compute_table_levels(tables, fks))
+
+
+def run_graph(
+    deps: dict[Hashable, Iterable[Hashable]],
+    step: Callable[[Hashable], object],
+    max_workers: int,
+) -> None:
+    """Call ``step(node)`` for every node of the acyclic graph ``deps``
+    (node -> the nodes it waits for) on a pool of ``max_workers`` threads,
+    each node as soon as all its dependencies have returned.
+
+    The calling thread alone submits ready nodes, never more than
+    ``max_workers`` at once, and waits for the first to finish, so no
+    worker ever blocks on another node and one worker is enough. The first
+    failure stops new submissions; it is re-raised once the nodes already
+    running have finished.
+    """
+    sorter = TopologicalSorter(deps)
+    sorter.prepare()
+    ready: deque[Hashable] = deque()
+    running: dict[Future, Hashable] = {}
+    error: BaseException | None = None
+    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        while True:
+            if error is None:
+                ready.extend(sorter.get_ready())
+                while ready and len(running) < max_workers:
+                    node = ready.popleft()
+                    running[pool.submit(step, node)] = node
+            if not running:
+                break
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for future in done:
+                node = running.pop(future)
+                if future.exception() is not None:
+                    error = error or future.exception()
+                else:
+                    sorter.done(node)
+    if error is not None:
+        raise error

@@ -2,8 +2,9 @@
 
 ``DbCopier.run`` must read each source table exactly once: a filtered
 table that other rows depend on (children or a self-ref FK) is read into
-one pin of its subset rows, from which its key set, its closures and its
-write all derive, and every other table is read by its write. No
+one pin of its subset rows, from which its closures, its write and its
+children's semi-joins all derive, and every other table is read by its
+write. No
 descendant may re-read an ancestor, no self-ref closure step may re-read
 its table, and the Parquet sink must not read its output back. Scans are
 counted from Spark's SQL status store (populated with the UI disabled)

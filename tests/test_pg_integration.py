@@ -798,9 +798,9 @@ def test_failed_write_restores_self_ref_deferral(spark, target_db):
 
 
 def test_snapshot_covers_every_read_of_a_copy(spark, source_db, target_db):
-    """src/DbCopier.scala:130-145 for a whole copy: reads are lazy, and a
-    table with a key set is read twice (key set, then write), so rows
-    committed after the export must stay invisible to every read."""
+    """src/DbCopier.scala:130-145 for a whole copy: reads are lazy and run
+    whenever the copy's graph reaches a table (its pin or its write), so
+    rows committed after the export must stay invisible to every read."""
     specs = full_specs()
     specs["users"] = specs["users"].where("id <> 2")
     copier, coord, tgt = make_copier(spark, source_db, target_db, specs)

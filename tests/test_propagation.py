@@ -230,8 +230,8 @@ def test_cte_closure_deep_chain_hostile_names(spark):
 
 def test_subsetting_hostile_key_names(spark):
     """A filtered self-ref table whose PK/FK names hold a space and a
-    backtick, with one child: the closure, the children's key set and the
-    semi-join all take the names literally."""
+    backtick, with one child: the closure and the child's semi-join on
+    the parent's pin take the names literally."""
     nodes = spark.createDataFrame(
         [(1, None), (2, 1), (3, 2), (4, None), (5, 4)],
         "`node`` id` int, `up``link` int",

@@ -1,10 +1,17 @@
-"""TableSorter ports — ``tests/TableSorterTest.scala``."""
+"""TableSorter ports — ``tests/TableSorterTest.scala`` — and the
+dependency-graph runner of the copy."""
 
 from __future__ import annotations
 
+import random
+import sys
+import threading
+
+import pytest
+
 from simple_anonymizer_spark.plans.table_sorter import (compute_table_levels,
                                                         group_tables_by_level,
-                                                        sort_tables)
+                                                        run_graph, sort_tables)
 from simple_anonymizer_spark.sources.catalog import LogicalFK
 
 
@@ -65,3 +72,42 @@ def test_sort_tables_end_to_end():
     assert sort_tables(["order_items", "users", "orders"], fks) == [
         ["users"], ["orders"], ["order_items"],
     ]
+
+
+def test_run_graph_stops_submitting_after_the_first_failure():
+    ran = []
+
+    def step(node):
+        ran.append(node)
+        if node == "a":
+            raise KeyError(node)
+
+    # One worker: "a" runs first, so "d" was ready but never submitted.
+    with pytest.raises(KeyError):
+        run_graph({"a": [], "b": ["a"], "d": []}, step, max_workers=1)
+    assert ran == ["a"]
+
+
+def test_run_graph_stress_each_node_once_after_its_dependencies():
+    """More workers than cores and a short switch interval: every node runs
+    exactly once, and only after each of its dependencies has returned."""
+    rng = random.Random(7)
+    deps = {i: rng.sample(range(i), min(i, rng.randint(0, 3))) for i in range(300)}
+    finished, started, lock = set(), [], threading.Lock()
+    early = []
+
+    def step(node):
+        with lock:
+            started.append(node)
+            early.extend(d for d in deps[node] if d not in finished)
+        with lock:
+            finished.add(node)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        run_graph(deps, step, max_workers=32)
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(started) == list(range(300))
+    assert early == []
