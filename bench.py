@@ -6,8 +6,9 @@ capture always retains it:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is fully materialized via the no-op sink (executes the whole
-plan executor-side, no driver collect). A warm-up pass on a trivial query
-absorbs session/JIT startup so numbers reflect steady-state throughput.
+plan executor-side, no driver collect). Each tier is first run once at
+$SPARK_GRAFT_WARM_DIR (sf0.001) so the timed runs measure execution, not
+codegen compile; the session is ``simple_anonymizer_spark.session.get_spark``.
 """
 
 from __future__ import annotations
@@ -16,13 +17,13 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession
 
 from simple_anonymizer_spark.queries import QUERIES
+from simple_anonymizer_spark.session import best_of, get_spark, noop
 
 HEADLINE = [
     "anon_customer_pii",
@@ -92,90 +93,59 @@ HEADLINE = [
 SWEEP = [n for n in QUERIES if n not in HEADLINE]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
+def time_tier(
+    spark: SparkSession,
+    names: list[str],
+    sf_dir: str,
+    warm_dir: str,
+    reps: int,
+    errors: dict[str, str],
+) -> dict[str, float]:
+    """Warm every query of a tier at ``warm_dir``, then time each one
+    best-of-``reps`` at ``sf_dir``, fully materialized into the no-op sink.
 
-    spark = (
-        SparkSession.builder.appName("simple-anonymizer-spark-bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm-up at the smallest scale factor: compiles each query's
-    # whole-stage-codegen classes (cache keys on generated source, which is
-    # scale-independent) so timed runs measure execution, not JIT.
-    #
-    # HEADLINE-ONLY here: round 6 proved that warming the whole registry
-    # (231 plans) before timing the headline tier contaminates the
-    # committed artifact — accumulated JVM/session state inflated
-    # doc_surprisal_corpus to 10.62 s in BENCH_r06 vs 2.02 s standalone
-    # best-of-3 (same box, same config), manufacturing phantom regressions
-    # that grow with registry size. The headline tier is the
-    # round-over-round comparability record, so it is warmed and TIMED in
-    # a fresh-session-equivalent state; the sweep tier warms afterwards.
-    warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    for name in HEADLINE:
+    The whole tier is warmed before any of it is timed (the first run of a
+    big expression pays seconds of codegen compile, whose cache keys are
+    scale-independent); a warm-up failure is left for the timed run to
+    report. A query that THROWS while timed is recorded in ``errors`` (its
+    exception class) instead of killing the bench: round 2 produced no
+    number at all because one AnalysisException crashed the whole run, and
+    a partial measurement always beats none.
+    """
+    for name in names:
         try:
-            QUERIES[name](spark, warm_dir).write.format("noop").mode(
-                "overwrite").save()
-        except Exception:
+            noop(QUERIES[name](spark, warm_dir))
+        except Exception:  # noqa: BLE001 - the timed run reports it
             pass
-
-    # Two timed executions per query, best-of reported: single runs on a
-    # shared box see ±50% noise (GC pauses, scheduler jitter); the minimum
-    # is the steady-state throughput the plan actually delivers. A query
-    # that THROWS records an error instead of killing the bench — round 2
-    # produced no number at all because one AnalysisException crashed the
-    # whole run; a partial measurement always beats none.
     timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for attempt in range(2):
-        for name in HEADLINE:
-            if name in errors:
-                continue
-            start = time.perf_counter()
-            try:
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite").save()
-            except Exception as exc:  # noqa: BLE001 - record and continue
-                errors[name] = type(exc).__name__
-                timings.pop(name, None)
-                continue
-            elapsed = round(time.perf_counter() - start, 3)
-            if name not in timings or elapsed < timings[name]:
-                timings[name] = elapsed
-
-    # Sweep tier: warm (codegen compile at sf0.001) then one timed pass
-    # for every remaining registry query. Sweep warm-up runs AFTER the
-    # headline tier has been timed (see the headline warm-up note).
-    for name in SWEEP:
+    for name in names:
         try:
-            QUERIES[name](spark, warm_dir).write.format("noop").mode(
-                "overwrite").save()
-        except Exception:
-            pass
-    sweep: dict[str, float] = {}
-    for name in SWEEP:
-        if name in errors:
-            continue
-        start = time.perf_counter()
-        try:
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
+            best, _ = best_of(lambda: noop(QUERIES[name](spark, sf_dir)), reps)
         except Exception as exc:  # noqa: BLE001 - record and continue
             errors[name] = type(exc).__name__
             continue
-        sweep[name] = round(time.perf_counter() - start, 3)
+        timings[name] = round(best, 3)
+    return timings
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+    spark = get_spark("simple-anonymizer-spark-bench")
+
+    # HEADLINE first, warmed and timed before the sweep is even warmed:
+    # round 6 proved that warming the whole registry (231 plans) before
+    # timing the headline tier contaminates the committed artifact —
+    # accumulated JVM/session state inflated doc_surprisal_corpus to
+    # 10.62 s in BENCH_r06 vs 2.02 s standalone best-of-3 (same box, same
+    # config), manufacturing phantom regressions that grow with registry
+    # size. The headline tier is the round-over-round comparability record
+    # (best-of-2); the sweep tier gets one timed pass per query.
+    errors: dict[str, str] = {}
+    timings = time_tier(spark, HEADLINE, sf_dir, warm_dir, 2, errors)
+    sweep = time_tier(spark, SWEEP, sf_dir, warm_dir, 1, errors)
 
     total = round(sum(timings.values()), 3)
     # Two lines, sweep FIRST and the compact headline LAST: the driver's

@@ -22,9 +22,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 from simple_anonymizer_spark.operators import components
+from simple_anonymizer_spark.session import get_spark
 
 
 def main() -> None:
@@ -33,17 +34,7 @@ def main() -> None:
     # into the next chain's id range.
     if not all(0 < d < 10000 for d in diameters):
         raise SystemExit(f"diameters must be in 1..9999, got {diameters}")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("components-chain-bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("components-chain-bench")
 
     out = {}
     for d in diameters:

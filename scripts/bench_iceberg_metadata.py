@@ -27,8 +27,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
+from simple_anonymizer_spark.session import best_of, get_spark, noop  # noqa: E402
 from simple_anonymizer_spark.sources import iceberg as I  # noqa: E402
 
 N_PARTS = 10  # distinct partition values in the synthetic tier
@@ -74,27 +75,17 @@ def synthetic_append(table_dir: str, n_files: int) -> None:
     I._commit_metadata(table_dir, meta, version)
 
 
-def timeit(fn, reps: int = 3) -> tuple[float, object]:
-    best, val = float("inf"), None
-    for _ in range(reps):
-        t0 = time.time()
-        val = fn()
-        best = min(best, time.time() - t0)
-    return best, val
-
-
 def measure(table_dir: str, label: str, spark=None) -> None:
     n = len(I.iceberg_plan_files(table_dir))
-    t_count, total = timeit(lambda: I.iceberg_count(table_dir))
-    t_plan, files = timeit(lambda: I.iceberg_plan_files(table_dir))
-    t_prune, pruned = timeit(lambda: I.iceberg_plan_files(
+    t_count, total = best_of(lambda: I.iceberg_count(table_dir), 3)
+    t_plan, _ = best_of(lambda: I.iceberg_plan_files(table_dir), 3)
+    t_prune, pruned = best_of(lambda: I.iceberg_plan_files(
         table_dir, partition_filter={"source": "s3"},
-        predicates=[("doc_id", ">=", 0)]))
+        predicates=[("doc_id", ">=", 0)]), 3)
     t_dist = float("nan")
     if spark is not None:
-        t_dist, _ = timeit(lambda: I.iceberg_live_files_distributed(
-            spark, table_dir).write.format("noop").mode(
-                "overwrite").save())
+        t_dist, _ = best_of(lambda: noop(I.iceberg_live_files_distributed(
+            spark, table_dir)), 3)
     print(f"{label:>10}  files={n:>7}  rows={total:>11}  "
           f"count={t_count:7.3f}s  plan={t_plan:7.3f}s  "
           f"pruned_plan={t_prune:7.3f}s  dist_walk={t_dist:7.3f}s  "
@@ -103,11 +94,7 @@ def measure(table_dir: str, label: str, spark=None) -> None:
 
 
 def main() -> None:
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.ui.enabled", "false")
-             .config("spark.sql.shuffle.partitions", "8")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("iceberg-metadata-bench")
     root = "/tmp/ice_meta_bench"
     shutil.rmtree(root, ignore_errors=True)
 

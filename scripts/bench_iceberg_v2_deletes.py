@@ -26,23 +26,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 from simple_anonymizer_spark.operators import dedup  # noqa: E402
+from simple_anonymizer_spark.session import best_of, get_spark, noop  # noqa: E402
 from simple_anonymizer_spark.sources import iceberg as I  # noqa: E402
 
 
-def _noop(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
-def timeit(fn, reps: int = 3) -> float:
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 2)
+def read_s(spark, tbl: str) -> float:
+    """Best-of-3 seconds of a full read of the table."""
+    return round(best_of(lambda: noop(I.read_iceberg(spark, tbl)), 3)[0], 2)
 
 
 def run_tier(spark, sf_dir: str, root: str) -> None:
@@ -54,17 +47,17 @@ def run_tier(spark, sf_dir: str, root: str) -> None:
     t0 = time.perf_counter()
     I.create_iceberg(docs, tbl, format_version=2)
     t_create = round(time.perf_counter() - t0, 2)
-    r_plain = timeit(lambda: _noop(I.read_iceberg(spark, tbl)))
+    r_plain = read_s(spark, tbl)
     upd = (docs.where(F.col("doc_id") % 10 == 0)
            .withColumn("text", F.concat(F.col("text"), F.lit(" [v2]"))))
     t0 = time.perf_counter()
     I.upsert_iceberg(spark, tbl, upd, ["doc_id"])
     t_upsert = round(time.perf_counter() - t0, 2)
-    r_upserted = timeit(lambda: _noop(I.read_iceberg(spark, tbl)))
+    r_upserted = read_s(spark, tbl)
     t0 = time.perf_counter()
     I.delete_iceberg_rows(spark, tbl, "doc_id % 10 = 3")
     t_posdel = round(time.perf_counter() - t0, 2)
-    r_both = timeit(lambda: _noop(I.read_iceberg(spark, tbl)))
+    r_both = read_s(spark, tbl)
     print(f"{sf_dir:>22}  docs={n:>7}  create={t_create:6.2f}s  "
           f"read_plain={r_plain:6.2f}s  upsert_commit={t_upsert:6.2f}s  "
           f"read_upserted={r_upserted:6.2f}s  posdel_commit={t_posdel:6.2f}s"
@@ -72,12 +65,7 @@ def run_tier(spark, sf_dir: str, root: str) -> None:
 
 
 def main() -> None:
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.ui.enabled", "false")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("iceberg-v2-deletes-bench")
     root = "/tmp/ice_v2_bench"
     shutil.rmtree(root, ignore_errors=True)
     tiers = sys.argv[1:] or ["/root/testdata/sf0.1", "/tmp/sf1"]

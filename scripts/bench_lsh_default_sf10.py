@@ -2,7 +2,8 @@
 caller gets without flags) at a given sf dir — the round-9 re-run of the
 SCALE.md sf10 row after hash_shingles=True became the default. Times a
 noop-sink materialization (the CLAUDE.md discipline: .count() lets
-Catalyst delete the work) and reports the emitted pair count.
+Catalyst delete the work) and reports the emitted pair count, observed on
+that same write (an ``Observation``), so the pipeline runs once.
 
 Usage: SPARK_GRAFT_SF_DIR=/tmp/sf10 python scripts/bench_lsh_default_sf10.py
 """
@@ -16,26 +17,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, functions as F
 
 from simple_anonymizer_spark.operators import dedup
+from simple_anonymizer_spark.session import get_spark, noop
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/tmp/sf10")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("lsh-default-sf10")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("lsh-default-sf10")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
@@ -43,14 +33,14 @@ def main() -> None:
     warm = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
-    dedup.minhash_lsh_pairs(warm, jaccard_threshold=0.3).write.format(
-        "noop").mode("overwrite").save()
+    noop(dedup.minhash_lsh_pairs(warm, jaccard_threshold=0.3))
 
+    pairs = Observation()
     start = time.perf_counter()
-    dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.3).write.format(
-        "noop").mode("overwrite").save()
+    noop(dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.3)
+         .observe(pairs, F.count(F.lit(1)).alias("n")))
     elapsed = time.perf_counter() - start
-    n_pairs = dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.3).count()
+    n_pairs = pairs.get["n"]
     print(json.dumps({
         "metric": "minhash_lsh_pairs_default_path", "unit": "sec",
         "value": round(elapsed, 1), "n_pairs": n_pairs, "sf_dir": sf_dir,

@@ -4,8 +4,9 @@ repo's measurement discipline (CLAUDE.md: bench timings swing
 fresh session before calling a regression).
 
 Usage: python scripts/bench_standalone.py q1 q2 ...   [default: the
-three round-6 residual-slowdown queries]. Prints one JSON line.
-Uses the same session config as bench.py so numbers are comparable.
+three round-6 residual-slowdown queries]. BEST_OF sets the number of
+timed runs (default 3). Prints one JSON line. Uses bench.py's session
+(``session.get_spark``) and its sf0.001 warm-up, so numbers are comparable.
 """
 
 from __future__ import annotations
@@ -13,13 +14,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from simple_anonymizer_spark.queries import QUERIES
+from simple_anonymizer_spark.session import best_of, get_spark, noop, warmed
 
 DEFAULT = ["doc_surprisal_corpus", "dedup_golden_records", "bpe_encode_docs"]
 
@@ -28,30 +27,12 @@ def main() -> None:
     names = sys.argv[1:] or DEFAULT
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("bench-standalone")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    reps = int(os.environ.get("BEST_OF", "3"))
+    spark = get_spark("bench-standalone")
 
     out: dict[str, float] = {}
-    for name in names:
-        QUERIES[name](spark, warm_dir).write.format("noop").mode(
-            "overwrite").save()
-        best = float("inf")
-        for _ in range(int(os.environ.get("BEST_OF", "3"))):
-            start = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
-            best = min(best, time.perf_counter() - start)
+    for name in warmed(spark, names, warm_dir):
+        best, _ = best_of(lambda: noop(QUERIES[name](spark, sf_dir)), reps)
         out[name] = round(best, 3)
     print(json.dumps({"metric": "standalone_best_of_3", "unit": "sec",
                       "queries": out, "sf_dir": sf_dir}))

@@ -21,41 +21,25 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from simple_anonymizer_spark.queries import QUERIES
+from simple_anonymizer_spark.session import get_spark, noop, warmed
 
 
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("profile-query")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("profile-query")
 
-    for name in names:
-        # warm codegen caches exactly like bench.py
-        QUERIES[name](spark, warm_dir).write.format("noop").mode(
-            "overwrite").save()
+    for name in warmed(spark, names, warm_dir):
         t0 = time.perf_counter()
         df = QUERIES[name](spark, sf_dir)
         t1 = time.perf_counter()
         df._jdf.queryExecution().executedPlan()
         t2 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
+        noop(df)
         t3 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
+        noop(df)
         t4 = time.perf_counter()
         print(json.dumps({
             "query": name,

@@ -31,10 +31,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 from simple_anonymizer_spark.operators import kmeans
 from simple_anonymizer_spark.operators.dedup import ensure_parallelism
+from simple_anonymizer_spark.session import get_spark, noop
 
 TAU = float(os.environ.get("SEMDEDUP_TAU", "0.45"))
 BASE = "/root/testdata/sf0.1"
@@ -81,17 +82,7 @@ def cross_within_split(vecs: np.ndarray, base_n: int, tau: float):
 
 def main() -> None:
     dirs = sys.argv[1:] or [BASE, "/tmp/sf1", "/tmp/sf3", "/tmp/sf10"]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("semdedup-semantics")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("semdedup-semantics")
 
     import pyarrow.parquet as pq
 
@@ -112,7 +103,7 @@ def main() -> None:
         owner = []
         out = kmeans.semantic_dedup(
             emb, n_clusters=k, threshold=TAU, cache_owner=owner)
-        out.write.format("noop").mode("overwrite").save()
+        noop(out)
         wall = time.perf_counter() - t0
         # survivor count from the SAME DataFrame (sum(kept) cannot be
         # pruned — kept depends on the pair join)

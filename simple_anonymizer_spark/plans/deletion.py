@@ -10,7 +10,11 @@ CASCADE`` touches only children whose FK actually references a deleted
 parent, so a NULL-FK child always survives — every edge propagates
 ``fk IS NULL OR fk IN (surviving parents)``, the same keep-rule
 (``keep_if_parent_in``) subsetting applies to its self-ref closures.
-Self-referencing FKs reuse the subsetting closure (``self_ref_closure``).
+Self-referencing FKs reuse the subsetting closure (``self_ref_closure``)
+over the table's hit rows, pinned once (eager ``DISK_ONLY``
+``localCheckpoint``, as ``apply_subsetting`` pins a filtered table): the
+closure's probe, its per-level CTE reads and the keep join all read the
+pin, so the source table and its parents' joins run once.
 
 The seed predicate is likewise SQL-DELETE-shaped: rows where the delete
 predicate evaluates to NULL are NOT deleted (``NOT coalesce(φ, false)``).
@@ -25,6 +29,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -64,8 +69,10 @@ def cascade_delete(
                     *map(_quoted, fk.pk_columns)).distinct()
                 eff = keep_if_parent_in(eff, parent_keys, fk)
                 hit = True
-        if hit:
-            for fk in catalog.self_ref_fks(table):
+        self_fks = catalog.self_ref_fks(table)
+        if hit and self_fks:
+            eff = eff.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            for fk in self_fks:
                 eff = keep_if_parent_in(eff, self_ref_closure(eff, fk), fk)
         out[table] = eff
         touched[table] = hit

@@ -17,6 +17,7 @@ unattributed one fails the test rather than going uncounted).
 
 from __future__ import annotations
 
+import functools
 import re
 
 import duckdb
@@ -25,6 +26,7 @@ from pyspark.sql import functions as F
 
 import test_pg_integration as T
 from simple_anonymizer_spark.plans import TableSpec
+from simple_anonymizer_spark.plans import deletion, propagation
 from simple_anonymizer_spark.plans.db_copier import DbCopier
 from simple_anonymizer_spark.plans.propagation import compute_propagated_filters
 from simple_anonymizer_spark.plans.table_spec import WhereClause
@@ -225,3 +227,22 @@ def test_fixture_catalog_copy_scans_and_edge_cases(spark, fixture_dir, tmp_path)
         cols = sorted(FIXTURE_CATALOG.primary_keys[t])
         assert read_output(spark, out_dir, t, cols) == rows, t
         assert result[t] == len(rows), t
+
+
+@pytest.mark.parametrize("cte", [False, True], ids=["driver_bfs", "cte"])
+def test_cascade_delete_reads_self_ref_table_once(spark, fixture_dir, monkeypatch, cte):
+    """Cascade deletion into a self-ref table pins its hit rows once: the
+    closure probe, the closure (per CTE level too) and the survivors'
+    collect read the pin, not the source table or its parent's join."""
+    if cte:
+        monkeypatch.setattr(deletion, "self_ref_closure", functools.partial(
+            propagation.self_ref_closure, driver_threshold=0))
+    source = parquet_reader(spark, fixture_dir)
+    counter = ScanCounter(spark)
+    out = deletion.cascade_delete(
+        {t: source(t) for t in ("users", "categories")}, FIXTURE_CATALOG,
+        {"users": "id = 3"})
+    # Books (3) and Non-Fiction (10) are owned by user 3; Fiction (9) is
+    # under Books, so the closure drops it.
+    assert sorted(r.id for r in out["categories"].collect()) == [1, 2, 4, 5, 6, 7, 8]
+    assert counter.per_table() == {"users": 1, "categories": 1}

@@ -7,11 +7,16 @@ These guards make that class of accident a test failure: no tracked blob
 may exceed the size cap, and no tracked parquet may live outside the
 declared fixture paths (test fixtures are tiny goldens; scale data is
 regenerated on demand by scripts/make_sf1.py).
+
+Sessions are built in one place: ``bench.py`` and ``scripts/`` call
+``session.get_spark``, so a hand-built session there is a test failure
+too.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -20,6 +25,14 @@ MAX_TRACKED_BYTES = 5 * 1024 * 1024
 
 # directories where small binary fixtures are legitimate
 FIXTURE_PREFIXES = ("tests/fixtures/", "tests/goldens/")
+
+# the only modules that may build a SparkSession themselves: the engine's
+# factory, tier-1's small fixed session, and the benchmark's session
+# (scratch paths inside its work directory)
+SESSION_BUILDERS = {
+    "simple_anonymizer_spark/session.py", "tests/conftest.py", "perfbench/harness.py",
+}
+_BUILDER = re.compile(r"SparkSession\s*\.\s*builder")
 
 
 def _tracked_files() -> list[tuple[str, int]]:
@@ -53,4 +66,17 @@ def test_no_tracked_parquet_outside_fixture_paths():
     ]
     assert not strays, (
         f"tracked parquet/orc outside declared fixture paths: {strays}"
+    )
+
+
+def test_sessions_are_built_only_by_the_session_factory():
+    hand_built = []
+    for p, _ in _tracked_files():
+        if p.endswith(".py") and p not in SESSION_BUILDERS:
+            with open(os.path.join(REPO, p), encoding="utf-8") as fh:
+                if _BUILDER.search(fh.read()):
+                    hand_built.append(p)
+    assert not hand_built, (
+        f"hand-built SparkSessions (use simple_anonymizer_spark.session."
+        f"get_spark): {hand_built}"
     )
